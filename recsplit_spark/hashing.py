@@ -95,21 +95,6 @@ def mix64_scalar(x: int) -> int:
     return int(mix64(np.array([x & ((1 << 64) - 1)], dtype=np.uint64))[0])
 
 
-def supplemental_hash(h: np.ndarray, index) -> np.ndarray:
-    """Derive the ``index``-th trial hash from signature(s) ``h`` (int64).
-
-    ``index``: scalar or (B,) array of trial indices. Returns (n,) or (n, B).
-    Reference analogue: ``Settings.supplementalHash``
-    (``Settings.java:277-285``) — one strong universal hash re-keyed by a
-    cheap Weyl-increment mix per trial.
-    """
-    h = np.asarray(h, dtype=np.int64)
-    idx = np.asarray(index, dtype=np.int64)
-    if idx.ndim == 0:
-        return mix64_inplace(h + idx * GOLDEN)
-    return mix64_inplace(h[:, None] + (idx * GOLDEN)[None, :])
-
-
 def reduce_to(h: np.ndarray, n: int) -> np.ndarray:
     """Map 64-bit hash(es) uniformly onto [0, n) without modulo bias.
 
@@ -177,13 +162,3 @@ def node_positions(h: np.ndarray, index: int, n: int) -> np.ndarray:
     off = (np.array([index], dtype=np.int64) * GOLDEN)[0]
     x = np.asarray(h, dtype=np.int64) + off
     return positions_inplace(x, n)
-
-
-def to_i64(x: np.ndarray) -> np.ndarray:
-    """Reinterpret an array as int64 signatures (no copy for (u)int64)."""
-    x = np.asarray(x)
-    if x.dtype == np.int64:
-        return x
-    if x.dtype == np.uint64:
-        return x.view(np.int64)
-    return x.astype(np.int64)

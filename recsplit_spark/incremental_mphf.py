@@ -55,19 +55,15 @@ one signature per generation per row; the Python side early-exits rows
 as they are claimed), so nightly appends with weekly compaction — G <=
 ~10 — is the intended operating cadence.
 
-Commit protocol (mirrors ``sketches/incremental.IncrementalProfile``):
-config manifest written once at first append and verified on every
-reopen; per-generation payload dir first, lineage append second — the
-committed generation set is DEFINED by lineage rows, so a crash between
-the two leaves an orphaned ``gen=N`` dir that the next append ignores
-and overwrites. A single-writer ``_lock`` guards the read-build-commit
-sequence.
+Commit protocol: ``store.py`` (manifest pin, per-generation payload dir
+first and lineage row second, committed set defined by lineage,
+single-writer ``_lock``, ``sb<id>:<uuid>`` stream replay marker).
 """
 
 from __future__ import annotations
 
 import time
-import uuid
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -75,12 +71,14 @@ import pyarrow as pa
 from .filters import build_fingerprint_table
 from .mphf import MPHFDescriptor, RecSplitBuilder, key_mode_for, key_sig_expr
 from .settings import RULE_GEN
-from .sketches.incremental import (
-    _dir_exists,
-    acquire_writer_lock,
+from .store import (
+    break_lock,
+    dir_exists,
+    new_run_id,
+    pin_manifest,
     read_lineage_rows,
-    release_writer_lock,
     stream_high_water,
+    writer_lock,
 )
 
 # Fingerprint-hash seed shared by ALL generations (stored in the manifest):
@@ -97,6 +95,8 @@ _LIN_SCHEMA = (
     "gen int, n long, offset long, salt long, n_exceptions long,"
     " run_id string, wall_s double"
 )
+#: committed lineage rows, read under their schema (no inference job)
+_lineage = partial(read_lineage_rows, schema=_LIN_SCHEMA)
 
 
 class _Gen:
@@ -150,65 +150,47 @@ class IncrementalMPHF:
             self.rule_gen,
         )
 
-    def _check_or_write_manifest(self, spark, key_mode: int | None) -> int:
+    def _pin_manifest(self, spark, key_mode: int | None) -> int:
         """Verify (or, at genuine first use, write) the config manifest;
-        returns the pinned key_mode. Like the checkpoint manifests, a
-        path with committed generations but no readable manifest is
-        refused rather than silently adopted — and the existence check
-        runs FIRST so a transient read error on an existing manifest
-        propagates instead of re-pinning the path."""
-        if not _dir_exists(spark, f"{self.path}/manifest"):
-            if _dir_exists(spark, f"{self.path}/lineage"):
-                raise RuntimeError(
-                    f"incremental MPHF at {self.path} has committed "
-                    "generations but no readable manifest; re-run against "
-                    "a fresh path or restore the manifest"
-                )
-            if key_mode is None:
+        returns the pinned key_mode. ``key_mode=None`` (lookups) adopts
+        the committed one and refuses a path with nothing committed."""
+
+        def _want(have):
+            if have is None and key_mode is None:
                 raise RuntimeError(
                     f"no incremental MPHF committed at {self.path} "
                     "(manifest missing); append a first batch to create it"
                 )
-            spark.createDataFrame(
-                [self._config_row(key_mode)], _CFG_SCHEMA
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{self.path}/manifest"
-            )
-            self._key_mode = key_mode
-            return key_mode
-        r = spark.read.parquet(f"{self.path}/manifest").collect()[0]
-        pinned = (
-            r["key_mode"], r["leaf_size"], r["avg_bucket_size"],
-            r["fp_bits"], r["fp_seed"], r["rule_gen"],
-        )
-        want_km = pinned[0] if key_mode is None else key_mode
-        if pinned != self._config_row(want_km):
-            raise RuntimeError(
+            return [self._config_row(key_mode)]
+
+        (pinned,) = pin_manifest(
+            spark,
+            f"{self.path}/manifest",
+            _CFG_SCHEMA,
+            _want,
+            committed=lambda: dir_exists(spark, f"{self.path}/lineage"),
+            refuse=(
+                f"incremental MPHF at {self.path} has committed "
+                "generations but no readable manifest; re-run against "
+                "a fresh path or restore the manifest"
+            ),
+            mismatch=lambda have, want: (
                 "incremental MPHF manifest mismatch: committed config "
-                f"{pinned} != requested {self._config_row(want_km)}; "
+                f"{have[0]} != requested {want[0]}; "
                 "appending under a different config would break the "
                 "route/evaluate contract for already-assigned ids"
-            )
+            ),
+        )
         self._key_mode = pinned[0]
-        self.fp_seed = int(r["fp_seed"])
+        self.fp_seed = int(pinned[4])
         return pinned[0]
-
-    # -- writer lock (shared incremental-family plumbing) ----------------------
-    def _acquire_lock(self, spark) -> None:
-        acquire_writer_lock(spark, self.path, "incremental MPHF")
-
-    def _release_lock(self, spark) -> None:
-        release_writer_lock(spark, self.path)
 
     def break_lock(self, spark) -> None:
         """Remove a stale writer lock left by a crashed append. Only safe
         when no other writer is actually running."""
-        self._release_lock(spark)
+        break_lock(spark, self.path)
 
     # -- committed state --------------------------------------------------------
-    def _lineage_rows(self, spark) -> list:
-        return read_lineage_rows(spark, self.path)
-
     def _load_gens(self, spark) -> list[_Gen]:
         """Load + decode every committed generation (driver-side, cached
         on the handle; ``append`` invalidates). The committed set is
@@ -216,9 +198,9 @@ class IncrementalMPHF:
         append are invisible here."""
         if self._gens is not None:
             return self._gens
-        self._check_or_write_manifest(spark, None)
+        self._pin_manifest(spark, None)
         gens: list[_Gen] = []
-        for lr in self._lineage_rows(spark):
+        for lr in _lineage(spark, self.path):
             g = int(lr["gen"])
             row = spark.read.parquet(f"{self.path}/gen={g}/blob").collect()[0]
             desc = MPHFDescriptor.from_bytes(bytes(row["desc"]))
@@ -247,11 +229,11 @@ class IncrementalMPHF:
                 "n_exceptions": int(r["n_exceptions"]),
                 "run_id": r["run_id"],
             }
-            for r in self._lineage_rows(spark)
+            for r in _lineage(spark, self.path)
         ]
 
     def total_keys(self, spark) -> int:
-        rows = self._lineage_rows(spark)
+        rows = _lineage(spark, self.path)
         return int(rows[-1]["offset"] + rows[-1]["n"]) if rows else 0
 
     def should_compact(self, spark, max_exception_frac: float = 0.02) -> bool:
@@ -262,7 +244,7 @@ class IncrementalMPHF:
         grown past ``max_exception_frac`` of all keys. Exceeding the rule
         costs space and append wall, never correctness, so this is a
         planning signal for the nightly job, not a guard."""
-        g = len(self._lineage_rows(spark))
+        g = len(_lineage(spark, self.path))
         return g * 2.0 ** (-self.fp_bits) > 2.0 * max_exception_frac
 
     def last_stream_batch_id(self, spark) -> int:
@@ -271,7 +253,7 @@ class IncrementalMPHF:
         folded into the lineage ``run_id`` (``sb<id>:<uuid>``), so the
         replay marker commits ATOMICALLY with the generation itself —
         there is no sidecar state that can disagree with the data."""
-        return stream_high_water(self._lineage_rows(spark))
+        return stream_high_water(_lineage(spark, self.path))
 
     def bits_per_key(self, spark) -> float:
         gens = self._load_gens(spark)
@@ -314,15 +296,12 @@ class IncrementalMPHF:
         t0 = time.time()
         spark = df.sparkSession
         key_mode = key_mode_for(df, key_col)
-        # lock BEFORE the manifest check (see acquire_writer_lock)
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark, key_mode)
+        # lock BEFORE the manifest check (see store.writer_lock)
+        with writer_lock(spark, self.path, "incremental MPHF"):
+            self._pin_manifest(spark, key_mode)
             return self._append_locked(
                 df, key_col, duplicate_guard, t0, stream_batch_id
             )
-        finally:
-            self._release_lock(spark)
 
     def _append_locked(self, df, key_col, duplicate_guard, t0,
                        stream_batch_id=None):
@@ -413,9 +392,7 @@ class IncrementalMPHF:
             "gen int, n long, offset long, desc binary, fp binary",
         ).coalesce(1).write.mode("overwrite").parquet(f"{gdir}/blob")
         wall = time.time() - t0
-        run_id = uuid.uuid4().hex
-        if stream_batch_id is not None:
-            run_id = f"sb{int(stream_batch_id)}:{run_id}"
+        run_id = new_run_id(stream_batch_id)
         spark.createDataFrame(
             [(gen, desc.n, offset, desc.salt, n_exc, run_id, wall)],
             _LIN_SCHEMA,
@@ -687,7 +664,7 @@ class IncrementalMPHF:
                 else space_priority
             ),
         )
-        if new._lineage_rows(spark):
+        if _lineage(spark, new.path):
             raise RuntimeError(
                 f"compaction target {out_path} already has committed "
                 "generations; compact into a fresh path"

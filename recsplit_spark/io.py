@@ -61,9 +61,9 @@ def read_input(spark, source: str):
         # qualify against the PYTHON cwd: the JVM's working dir is
         # pinned at session launch and does not follow a later chdir
         return spark.read.parquet(os.path.abspath(source))
-    from .sketches.incremental import _dir_exists
+    from .store import dir_exists
 
-    if _dir_exists(spark, source):  # non-local default FS (hdfs etc.)
+    if dir_exists(spark, source):  # non-local default FS (hdfs etc.)
         return spark.read.parquet(source)
     raise ValueError(
         f"input {source!r} is neither a catalog table nor an existing "

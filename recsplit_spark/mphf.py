@@ -55,8 +55,9 @@ import pandas as pd
 import pyarrow as pa
 
 from .codecs import rice_split_decode, rice_split_encode, unzigzag, zigzag
-from .kernel import build_buckets, eval_bucket
+from .kernel import build_buckets
 from .settings import RULE_GEN, Settings, get_settings
+from .store import fs_for, has_data, pin_manifest
 
 _MAGIC = b"RSMP"
 # v2: the former pad byte now carries key_mode (0=string, 1=long). Bumped so
@@ -720,74 +721,56 @@ class RecSplitBuilder:
             rows = blocks_df.collect()
         return self._finalize(rows, n, salt, blog2, key_mode)
 
-    def _check_or_write_manifest(self, spark, blog2: int) -> None:
+    def _pin_manifest(self, spark, blog2: int) -> None:
         """Pin (leaf_size, avg_bucket_size, rule_gen, blog2) at first commit
-        under the checkpoint path; raise on resume mismatch.
+        under the checkpoint path (``<dir>/_manifest``: the underscore
+        keeps Hadoop/Spark listings from treating it as data); raise on
+        resume mismatch.
 
         The committed blocks are Rice streams encoded under a specific rule
         table: resuming with a different ``leaf_size`` (same bucket
         geometry), or resuming a checkpoint whose blobs were encoded under
         an older rule generation, would merge incompatible blobs with newly
         built ones — key-count and stream-length checks still pass, so the
-        descriptor silently misdecodes (non-bijective). Same failure class
-        the sketch CheckpointedBuild manifest closes
-        (``sketches/checkpoint.py:_check_or_write_manifest``); ``blog2``
+        descriptor silently misdecodes (non-bijective). ``blog2``
         additionally pins the bucket geometry, so a changed input size or
         ``avg_bucket_size`` fails loudly instead of scattering blobs at the
-        wrong offsets. The manifest lives at ``<dir>/_manifest`` (the
-        underscore keeps Hadoop/Spark file listings from treating it as
-        data under a future recursive read)."""
-        rule_gen = self.rule_gen
-        mpath = f"{self.checkpoint_dir}/_manifest"
-        try:
-            row = spark.read.parquet(mpath).collect()[0]
-        except Exception:  # noqa: BLE001 — no readable manifest
-            # A missing manifest is only a FIRST run if no salt=* blocks
-            # are committed yet: adopting pre-manifest blocks under the
-            # resume's settings is exactly the hole the manifest closes.
-            if self._has_committed_blocks(spark):
-                raise ValueError(
-                    f"checkpoint at {self.checkpoint_dir} has committed "
-                    "blocks but no readable manifest (pre-manifest "
-                    "checkpoint or corrupt manifest); re-run against a "
-                    "fresh path, or restore the manifest recording the "
-                    "original leaf_size/avg_bucket_size/rule_gen/blog2"
-                ) from None
-            spark.createDataFrame(
-                [(self.leaf_size, self.avg_bucket_size, rule_gen, blog2)],
-                "leaf_size int, avg_bucket_size int, rule_gen int, blog2 int",
-            ).write.mode("overwrite").parquet(mpath)
-            return
-        want = (self.leaf_size, self.avg_bucket_size, rule_gen, blog2)
-        got = (
-            int(row["leaf_size"]), int(row["avg_bucket_size"]),
-            int(row["rule_gen"]), int(row["blog2"]),
-        )
-        if got != want:
-            raise ValueError(
+        wrong offsets. A path with committed ``salt=*`` blocks but no
+        manifest is refused (protocol in ``store.py``)."""
+        want = (self.leaf_size, self.avg_bucket_size, self.rule_gen, blog2)
+        pin_manifest(
+            spark,
+            f"{self.checkpoint_dir}/_manifest",
+            "leaf_size int, avg_bucket_size int, rule_gen int, blog2 int",
+            [want],
+            committed=lambda: self._has_committed_blocks(spark),
+            refuse=(
+                f"checkpoint at {self.checkpoint_dir} has committed "
+                "blocks but no readable manifest (pre-manifest "
+                "checkpoint or corrupt manifest); re-run against a "
+                "fresh path, or restore the manifest recording the "
+                "original leaf_size/avg_bucket_size/rule_gen/blog2"
+            ),
+            mismatch=lambda have, _want: (
                 "MPHF checkpoint manifest mismatch: committed build used "
-                f"(leaf_size, avg_bucket_size, rule_gen, blog2)={got}, "
+                f"(leaf_size, avg_bucket_size, rule_gen, blog2)={have[0]}, "
                 f"resume requested {want}; resume with the original "
                 "settings or use a fresh path"
-            )
+            ),
+        )
 
     def _has_committed_blocks(self, spark) -> bool:
-        """True if any ``salt=*`` block dir under the checkpoint path holds
-        data (Hadoop FS listing, so it works on any supported filesystem)."""
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(self.checkpoint_dir)
-        try:
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-            if not fs.exists(hpath):
-                return False
-            for st in fs.listStatus(hpath):
-                name = st.getPath().getName()
-                if st.isDirectory() and name.startswith("salt="):
-                    if fs.listStatus(st.getPath()):
-                        return True
-            return False
-        except Exception:  # noqa: BLE001 — unlistable path: treat as empty
-            return False
+        """True if any ``salt=*`` block dir under the checkpoint path is
+        non-empty (Hadoop FS listing, so it works on any supported
+        filesystem). Any entry counts, even a bare ``_SUCCESS``: the
+        refusal errs toward "committed"."""
+        fs, root, _ = fs_for(spark, self.checkpoint_dir)
+        return bool(fs.exists(root)) and any(
+            st.isDirectory()
+            and st.getPath().getName().startswith("salt=")
+            and len(fs.listStatus(st.getPath())) > 0
+            for st in fs.listStatus(root)
+        )
 
     def _run_with_checkpoint(self, spark, blocks_df, sig_df, salt, blog2):
         """Resume-aware execution: completed bucket ranges are read from the
@@ -796,17 +779,15 @@ class RecSplitBuilder:
         """
         from pyspark.sql import functions as F
 
-        self._check_or_write_manifest(spark, blog2)
+        self._pin_manifest(spark, blog2)
         path = f"{self.checkpoint_dir}/salt={salt}"
         done_ranges: list[tuple[int, int]] = []
-        try:
+        if has_data(spark, path):
             existing = spark.read.parquet(path)
             done_ranges = [
                 (r["min_bucket"], r["max_bucket"])
                 for r in existing.select("min_bucket", "max_bucket").collect()
             ]
-        except Exception:  # noqa: BLE001 — no checkpoint yet
-            pass
         if done_ranges:
             remaining = sig_df.filter(
                 ~_range_membership_udf(spark, done_ranges)(F.col("bucket"))

@@ -32,11 +32,9 @@ planned re-key is: fit a fresh index, re-``assign`` the corpus once,
 start a new store — the same compaction cadence as
 ``IncrementalMPHF.compact``.
 
-Commit protocol: identical to the siblings — payload dir first, lineage
-row second (committed set DEFINED by lineage; orphaned ``gen=N`` dirs
-from a crash are invisible and overwritten), single-writer ``_lock``,
-``stream_batch_id`` folded into the lineage ``run_id`` for idempotent
-foreachBatch replay.
+Commit protocol: ``store.py``, like the siblings (payload dir first,
+lineage row second, single-writer ``_lock``, stream replay marker in the
+lineage ``run_id``).
 
 Reference analogue: none (minperf has no ANN); this is the task brief's
 similarity-search requirement in the lake-append form.
@@ -46,19 +44,22 @@ from __future__ import annotations
 
 import hashlib
 import time
-import uuid
+from functools import partial
 
 import numpy as np
 
-from ..sketches.incremental import (
-    _dir_exists,
-    acquire_writer_lock,
+from ..store import (
     align_tombstone_ids,
+    break_lock,
     commit_tombstone_generation,
+    dir_exists,
+    new_run_id,
+    pin_manifest,
     read_lineage_rows,
     read_tombstone_ids,
-    release_writer_lock,
+    stream_batch_row,
     stream_high_water,
+    writer_lock,
 )
 from .ann import IVFIndex
 
@@ -67,6 +68,8 @@ _CFG_SCHEMA = (
     " centroid_sha string, codec_sha string"
 )
 _LIN_SCHEMA = "gen int, n long, run_id string, wall_s double"
+#: committed lineage rows, read under their schema (no inference job)
+_lineage = partial(read_lineage_rows, schema=_LIN_SCHEMA)
 
 
 def _centroid_sha(index: IVFIndex) -> str:
@@ -106,29 +109,26 @@ class IncrementalANN:
         self._vec_col: str | None = None
 
     # -- manifest / lock ----------------------------------------------------------
-    def _check_or_write_manifest(self, spark, id_col, vec_col) -> None:
-        if not _dir_exists(spark, f"{self.path}/manifest"):
-            if _dir_exists(spark, f"{self.path}/lineage"):
-                raise RuntimeError(
-                    f"incremental ANN at {self.path} has committed "
-                    "generations but no readable manifest; re-run against "
-                    "a fresh path or restore the manifest"
-                )
-            if self._index is None or self._index.centroids is None:
-                raise RuntimeError(
-                    "first append needs a FITTED IVFIndex (pass index= to "
-                    "IncrementalANN); later opens reload it from the path"
-                )
-            if id_col is None:
-                raise RuntimeError(
-                    f"no incremental ANN committed at {self.path}; append "
-                    "a first batch to create it"
-                )
-            self._index.save(spark, f"{self.path}/index")
-            k, d = self._index.centroids.shape
-            csha = None
-            if self._codec is not None:
-                if getattr(self._codec, "needs_centroid", False) and (
+    def _pin_manifest(self, spark, id_col, vec_col) -> None:
+        """Pin (or verify) the centroid/codec contract; ``id_col=None``
+        adopts the committed column names and refuses a fresh path."""
+
+        def _want(have):
+            if have is None:
+                if self._index is None or self._index.centroids is None:
+                    raise RuntimeError(
+                        "first append needs a FITTED IVFIndex (pass index= "
+                        "to IncrementalANN); later opens reload it from the "
+                        "path"
+                    )
+                if id_col is None:
+                    raise RuntimeError(
+                        f"no incremental ANN committed at {self.path}; "
+                        "append a first batch to create it"
+                    )
+                if self._codec is not None and getattr(
+                    self._codec, "needs_centroid", False
+                ) and (
                     _centroid_sha(self._codec.index)
                     != _centroid_sha(self._index)
                 ):
@@ -137,90 +137,80 @@ class IncrementalANN:
                         "centroid set than the store's index; fit it on "
                         "this index (codes would silently misscore)"
                     )
-                blob = self._codec.to_bytes()
-                csha = hashlib.sha256(blob).hexdigest()
-                spark.createDataFrame(
-                    [(bytearray(blob),)], "codec binary"
-                ).coalesce(1).write.mode("overwrite").parquet(
-                    f"{self.path}/pq_codec"
-                )
-            spark.createDataFrame(
-                [(id_col, vec_col, int(k), int(d),
-                  _centroid_sha(self._index), csha)],
-                _CFG_SCHEMA,
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{self.path}/manifest"
-            )
-            self._id_col, self._vec_col = id_col, vec_col
-            return
-        r = spark.read.parquet(f"{self.path}/manifest").collect()[0]
-        rd = r.asDict()  # .get: pre-PQ manifests have no codec_sha column
-        if self._index is None:
-            self._index = IVFIndex.load(spark, f"{self.path}/index")
-        pinned_codec = rd.get("codec_sha")
-        if self._codec is None and pinned_codec is not None:
-            from .pq import codec_from_bytes
+                # sidecars before the manifest: a crash in between leaves
+                # no manifest, so the next first append redoes (overwrites)
+                # both
+                self._index.save(spark, f"{self.path}/index", mode="overwrite")
+                if self._codec is not None:
+                    spark.createDataFrame(
+                        [(bytearray(self._codec.to_bytes()),)], "codec binary"
+                    ).coalesce(1).write.mode("overwrite").parquet(
+                        f"{self.path}/pq_codec"
+                    )
+            else:
+                if self._index is None:
+                    self._index = IVFIndex.load(spark, f"{self.path}/index")
+                if self._codec is None and have[0][5] is not None:
+                    from .pq import codec_from_bytes
 
-            blob = bytes(
-                spark.read.parquet(f"{self.path}/pq_codec").collect()[0][
-                    "codec"
-                ]
-            )
-            # magic dispatch: PQC1 raw codec or PQR1 residual codec (the
-            # latter sha-checks the index we just loaded — the manifest's
-            # centroid pin makes that check a tautology here, but a
-            # hand-swapped index dir still fails loudly)
-            self._codec = codec_from_bytes(blob, self._index)
-        pinned = (r["id_col"], r["vec_col"], r["n_centroids"], r["dim"],
-                  r["centroid_sha"], pinned_codec)
-        k, d = self._index.centroids.shape
-        got = (
-            id_col or r["id_col"],
-            vec_col or r["vec_col"],
-            int(k),
-            int(d),
-            _centroid_sha(self._index),
-            _codec_sha(self._codec) if self._codec is not None else None,
-        )
-        if pinned != got:
-            raise RuntimeError(
+                    blob = bytes(
+                        spark.read.parquet(f"{self.path}/pq_codec")
+                        .collect()[0]["codec"]
+                    )
+                    # magic dispatch: PQC1 raw codec or PQR1 residual codec
+                    # (the latter sha-checks the index we just loaded — the
+                    # manifest's centroid pin makes that check a tautology
+                    # here, but a hand-swapped index dir still fails loudly)
+                    self._codec = codec_from_bytes(blob, self._index)
+            k, d = self._index.centroids.shape
+            return [(
+                id_col, vec_col, int(k), int(d), _centroid_sha(self._index),
+                _codec_sha(self._codec) if self._codec is not None else None,
+            )]
+
+        (pinned,) = pin_manifest(
+            spark,
+            f"{self.path}/manifest",
+            _CFG_SCHEMA,
+            _want,
+            committed=lambda: dir_exists(spark, f"{self.path}/lineage"),
+            refuse=(
+                f"incremental ANN at {self.path} has committed "
+                "generations but no readable manifest; re-run against "
+                "a fresh path or restore the manifest"
+            ),
+            mismatch=lambda have, want: (
                 "incremental ANN manifest mismatch: committed "
-                f"{pinned} != requested {got}; vectors assigned under one "
-                "centroid set are unreadable under another (search would "
-                "probe the wrong buckets), and PQ codes are unreadable "
-                "under a different codec"
-            )
+                f"{have[0]} != requested {want[0]}; vectors assigned under "
+                "one centroid set are unreadable under another (search "
+                "would probe the wrong buckets), and PQ codes are "
+                "unreadable under a different codec"
+            ),
+            # pre-PQ manifests have no codec_sha column
+            defaults={"codec_sha": None},
+        )
         self._id_col, self._vec_col = pinned[0], pinned[1]
-
-    def _acquire_lock(self, spark) -> None:
-        acquire_writer_lock(spark, self.path, "incremental ANN")
-
-    def _release_lock(self, spark) -> None:
-        release_writer_lock(spark, self.path)
 
     def break_lock(self, spark) -> None:
         """Remove a stale writer lock left by a crashed append."""
-        self._release_lock(spark)
+        break_lock(spark, self.path)
 
     # -- committed state ----------------------------------------------------------
-    def _lineage_rows(self, spark) -> list:
-        return read_lineage_rows(spark, self.path)
-
     def generations(self, spark) -> list[dict]:
         return [
             {"gen": int(r["gen"]), "n": int(r["n"]), "run_id": r["run_id"]}
-            for r in self._lineage_rows(spark)
+            for r in _lineage(spark, self.path)
         ]
 
     def total_vectors(self, spark) -> int:
-        return sum(int(r["n"]) for r in self._lineage_rows(spark))
+        return sum(int(r["n"]) for r in _lineage(spark, self.path))
 
     def last_stream_batch_id(self, spark) -> int:
-        return stream_high_water(self._lineage_rows(spark))
+        return stream_high_water(_lineage(spark, self.path))
 
     def index(self, spark) -> IVFIndex:
         """The pinned index (loaded from the path on first use)."""
-        self._check_or_write_manifest(spark, None, None)
+        self._pin_manifest(spark, None, None)
         return self._index
 
     def vectors(self, spark, include_tombstoned: bool = False):
@@ -235,7 +225,7 @@ class IncrementalANN:
         once."""
         from pyspark.sql import functions as F
 
-        rows = self._lineage_rows(spark)
+        rows = _lineage(spark, self.path)
         if not rows:
             raise RuntimeError(f"nothing committed at {self.path}")
         paths = [
@@ -250,7 +240,7 @@ class IncrementalANN:
         if include_tombstoned:
             return vec
         if self._id_col is None:  # fresh handle: the anti-join needs it
-            self._check_or_write_manifest(spark, None, None)
+            self._pin_manifest(spark, None, None)
         tomb = self._tombstones(spark)
         if tomb is None:
             return vec
@@ -258,7 +248,7 @@ class IncrementalANN:
             F.broadcast(tomb), on=self._id_col, how="left_anti"
         )
 
-    # -- deletion (tombstones; shared machinery in sketches/incremental) --------
+    # -- deletion (tombstones; shared machinery in store.py) ------------------
     def _tombstones(self, spark):
         """Distinct tombstoned ids, or None if nothing was ever deleted
         (the common case pays zero extra plan nodes)."""
@@ -266,7 +256,7 @@ class IncrementalANN:
 
     def total_tombstoned(self, spark) -> int:
         """Distinct deleted ids (a re-deleted id counts once)."""
-        self._check_or_write_manifest(spark, None, None)
+        self._pin_manifest(spark, None, None)
         t = self._tombstones(spark)
         return 0 if t is None else t.count()
 
@@ -287,9 +277,8 @@ class IncrementalANN:
         deletions (the usual case), not bulk expiry; bulk expiry IS a
         compaction."""
         t0 = time.time()
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark, None, None)
+        with writer_lock(spark, self.path, "incremental ANN"):
+            self._pin_manifest(spark, None, None)
             if isinstance(ids, (list, tuple)):
                 ids_df = spark.createDataFrame(
                     [(i,) for i in ids], f"{self._id_col} string"
@@ -303,15 +292,13 @@ class IncrementalANN:
                     )
                 )
             # no committed vectors -> nothing to forget, no-op
-            if not self._lineage_rows(spark):
+            if not _lineage(spark, self.path):
                 return {"gen": None, "n": 0, "wall_s": time.time() - t0}
             id_type = self.vectors(
                 spark, include_tombstoned=True
             ).schema[self._id_col].dataType
             ids_df = align_tombstone_ids(ids_df, self._id_col, id_type)
             return commit_tombstone_generation(spark, self.path, ids_df, t0)
-        finally:
-            release_writer_lock(spark, self.path)
 
     def bucket_stats(self, spark):
         """Per-bucket vector counts: ``DataFrame[centroid_id int,
@@ -337,7 +324,7 @@ class IncrementalANN:
         time for the planned re-key (``compact``). Driver cost is one
         k-row collect."""
         rows = self.bucket_stats(spark).collect()
-        self._check_or_write_manifest(spark, None, None)
+        self._pin_manifest(spark, None, None)
         k = int(self._index.centroids.shape[0])
         counts = {int(r["centroid_id"]): int(r["n"]) for r in rows}
         total = sum(counts.values())
@@ -364,13 +351,10 @@ class IncrementalANN:
         marker, like the sibling structures)."""
         t0 = time.time()
         spark = df.sparkSession
-        # lock BEFORE the manifest check (see acquire_writer_lock)
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark, id_col, vec_col)
+        # lock BEFORE the manifest check (see store.writer_lock)
+        with writer_lock(spark, self.path, "incremental ANN"):
+            self._pin_manifest(spark, id_col, vec_col)
             return self._append_locked(df, t0, stream_batch_id)
-        finally:
-            self._release_lock(spark)
 
     def _append_locked(self, df, t0, stream_batch_id):
         spark = df.sparkSession
@@ -382,7 +366,7 @@ class IncrementalANN:
                 "gen": None, "n": 0, "wall_s": time.time() - t0,
                 "skipped_replay": True,
             }
-        rows = self._lineage_rows(spark)
+        rows = _lineage(spark, self.path)
         gen = int(rows[-1]["gen"]) + 1 if rows else 0
         assigned = self._index.assign(
             df.select(self._id_col, self._vec_col), self._vec_col
@@ -412,9 +396,7 @@ class IncrementalANN:
             "overwrite"
         ).partitionBy("centroid_id").parquet(gdir)
         assigned.unpersist()
-        run_id = uuid.uuid4().hex
-        if stream_batch_id is not None:
-            run_id = f"sb{int(stream_batch_id)}:{run_id}"
+        run_id = new_run_id(stream_batch_id)
         wall = time.time() - t0
         spark.createDataFrame(
             [(gen, n, run_id, wall)], _LIN_SCHEMA
@@ -459,14 +441,11 @@ class IncrementalANN:
         downstream write can always be redone)."""
         t0 = time.time()
         spark = df.sparkSession
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark, id_col, vec_col)
+        with writer_lock(spark, self.path, "incremental ANN"):
+            self._pin_manifest(spark, id_col, vec_col)
             return self._append_dedup_locked(
                 df, threshold, probes, t0, stream_batch_id
             )
-        finally:
-            self._release_lock(spark)
 
     def _append_dedup_locked(self, df, threshold, probes, t0,
                              stream_batch_id):
@@ -477,24 +456,26 @@ class IncrementalANN:
 
         spark = df.sparkSession
         id_col, vec_col = self._id_col, self._vec_col
+        row = None
         if stream_batch_id is not None:
-            for r in self._lineage_rows(spark):
-                rid = r["run_id"] or ""
-                if rid.startswith(f"sb{int(stream_batch_id)}:"):
-                    gen = int(r["gen"])
-                    kept = df.join(
-                        self.vectors(spark)
-                        .filter(F.col("gen") == gen)
-                        .select(F.col(id_col)),
-                        id_col,
-                        "left_semi",
-                    )
-                    return kept, {
-                        "gen": gen, "n_in": None,
-                        "n_kept": int(r["n"]),
-                        "wall_s": time.time() - t0,
-                        "skipped_replay": True,
-                    }
+            row = stream_batch_row(
+                _lineage(spark, self.path), stream_batch_id
+            )
+        if row is not None:
+            gen = int(row["gen"])
+            kept = df.join(
+                self.vectors(spark)
+                .filter(F.col("gen") == gen)
+                .select(F.col(id_col)),
+                id_col,
+                "left_semi",
+            )
+            return kept, {
+                "gen": gen, "n_in": None,
+                "n_kept": int(row["n"]),
+                "wall_s": time.time() - t0,
+                "skipped_replay": True,
+            }
         if probes is None:
             probes = self._index.nprobe
 
@@ -526,7 +507,7 @@ class IncrementalANN:
         )
 
         # -- new-vs-old: probe buckets against the committed store
-        have_state = bool(self._lineage_rows(spark))
+        have_state = bool(_lineage(spark, self.path))
         if have_state:
             store = self.vectors(spark).select(
                 F.col(id_col).alias("id_b"),
@@ -596,7 +577,7 @@ class IncrementalANN:
 
         # -- commit (payload dir first, lineage second — same protocol
         # as append; an all-dup batch commits nothing)
-        rows = self._lineage_rows(spark)
+        rows = _lineage(spark, self.path)
         gen = int(rows[-1]["gen"]) + 1 if rows else 0
         if n_kept > 0:
             gdir = f"{self.path}/vectors/gen={gen}"
@@ -608,9 +589,7 @@ class IncrementalANN:
             payload.repartition("centroid_id").write.mode(
                 "overwrite"
             ).partitionBy("centroid_id").parquet(gdir)
-            run_id = uuid.uuid4().hex
-            if stream_batch_id is not None:
-                run_id = f"sb{int(stream_batch_id)}:{run_id}"
+            run_id = new_run_id(stream_batch_id)
             spark.createDataFrame(
                 [(gen, n_kept, run_id, time.time() - t0)], _LIN_SCHEMA
             ).write.mode("append").parquet(f"{self.path}/lineage")
@@ -638,7 +617,7 @@ class IncrementalANN:
         """Top-k cosine over the whole committed store: probe-set
         IN-filter -> partition-pruned scan of ~nprobe/k of the corpus ->
         JVM cosine + TakeOrdered."""
-        self._check_or_write_manifest(spark, None, None)
+        self._pin_manifest(spark, None, None)
         return self._index.search(
             self.vectors(spark), self._vec_col, query, k
         )
@@ -646,7 +625,7 @@ class IncrementalANN:
     def codec(self, spark):
         """The pinned PQ codec, or None for a plain store (loaded from
         the path on first use, like ``index``)."""
-        self._check_or_write_manifest(spark, None, None)
+        self._pin_manifest(spark, None, None)
         return self._codec
 
     def compact(self, spark, out_path: str, index: IVFIndex | None = None,
@@ -681,8 +660,8 @@ class IncrementalANN:
         import time as _time
 
         t0 = _time.time()
-        self._check_or_write_manifest(spark, None, None)
-        if _dir_exists(spark, f"{out_path.rstrip('/')}/lineage"):
+        self._pin_manifest(spark, None, None)
+        if dir_exists(spark, f"{out_path.rstrip('/')}/lineage"):
             raise RuntimeError(
                 f"compaction target {out_path} already has committed "
                 "generations; compact into a fresh path"
@@ -751,7 +730,7 @@ class IncrementalANN:
         floats are touched)."""
         from .pq import ivfadc_search
 
-        self._check_or_write_manifest(spark, None, None)
+        self._pin_manifest(spark, None, None)
         if self._codec is None:
             raise RuntimeError(
                 f"incremental ANN at {self.path} has no PQ codec pinned; "
@@ -786,7 +765,7 @@ class IncrementalANN:
         ``pq_score``."""
         from .pq import ivfadc_search_many
 
-        self._check_or_write_manifest(spark, None, None)
+        self._pin_manifest(spark, None, None)
         if self._codec is None:
             raise RuntimeError(
                 f"incremental ANN at {self.path} has no PQ codec pinned; "

@@ -54,17 +54,11 @@ residual pathological bucket by keeping the ``cap`` smallest old ids per
 (new doc, band, bucket) — mirroring ``_bucket_candidate_pairs``'s
 star-cap trade.
 
-Commit protocol (same discipline as the other incremental structures):
-config manifest (mode, num_hashes, bands, shingle, threshold) written at
-first append and refused on mismatch — band keys are slices of the
-signature, so a banding change poisons every persisted bucket join;
-payload dir FIRST, lineage row SECOND (the committed set is DEFINED by
-lineage; a crash in between leaves an orphaned ``gen=N`` dir the next
-append ignores and overwrites); single-writer ``_lock``;
-``stream_batch_id`` folds into the lineage ``run_id`` (``sb<id>:<uuid>``)
-so a replayed structured-streaming micro-batch is skipped atomically —
-the same marker-inside-the-commit design as
-``IncrementalMPHF.append`` (one batch re-appended = its docs dedup
+Commit protocol: ``store.py``. The manifest pins (mode, num_hashes,
+bands, shingle, threshold) — band keys are slices of the signature, so a
+banding change poisons every persisted bucket join. ``stream_batch_id``
+rides the lineage ``run_id`` so a replayed structured-streaming
+micro-batch is skipped atomically (one batch re-appended = its docs dedup
 against themselves and vanish, silently corrupting the kept corpus).
 
 Reference analogue: none — minperf has no dedup surface; this implements
@@ -81,17 +75,22 @@ from __future__ import annotations
 
 import math
 import time
-import uuid
+from functools import partial
 
-from ..sketches.incremental import (
-    _dir_exists,
-    acquire_writer_lock,
+from ..store import (
     align_tombstone_ids,
+    break_lock,
     commit_tombstone_generation,
+    dir_exists,
+    has_data,
+    new_run_id,
+    pin_manifest,
     read_lineage_rows,
+    read_manifest,
     read_tombstone_ids,
-    release_writer_lock,
+    stream_batch_row,
     stream_high_water,
+    writer_lock,
 )
 from .dedup import (
     _band_rows,
@@ -109,6 +108,8 @@ _LIN_SCHEMA = (
     "gen int, n_in long, n_kept long, n_matched_old long,"
     " n_clusters long, run_id string, wall_s double"
 )
+#: committed lineage rows, read under their schema (no inference job)
+_lineage = partial(read_lineage_rows, schema=_LIN_SCHEMA)
 
 
 class IncrementalDedup:
@@ -160,18 +161,20 @@ class IncrementalDedup:
         like ``delete``/``consolidate`` should adopt it, not restate
         it). The two caps are runtime knobs, not wire format."""
         path = path.rstrip("/")
-        if not _dir_exists(spark, f"{path}/manifest"):
+        if not has_data(spark, f"{path}/manifest"):
             raise RuntimeError(
                 f"no incremental dedup committed at {path}"
             )
-        r = spark.read.parquet(f"{path}/manifest").collect()[0]
+        ((mode, num_hashes, bands, shingle, threshold),) = read_manifest(
+            spark, f"{path}/manifest", _CFG_SCHEMA
+        )
         return cls(
             path,
-            threshold=float(r["threshold"]),
-            num_hashes=int(r["num_hashes"]),
-            bands=int(r["bands"]),
-            shingle=int(r["shingle"]),
-            mode=r["mode"],
+            threshold=threshold,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle=shingle,
+            mode=mode,
             bucket_cap=bucket_cap,
             state_bucket_cap=state_bucket_cap,
         )
@@ -183,48 +186,32 @@ class IncrementalDedup:
             self.threshold,
         )
 
-    def _check_or_write_manifest(self, spark) -> None:
-        if not _dir_exists(spark, f"{self.path}/manifest"):
-            if _dir_exists(spark, f"{self.path}/lineage"):
-                raise RuntimeError(
-                    f"incremental dedup at {self.path} has committed "
-                    "generations but no readable manifest; re-run against "
-                    "a fresh path or restore the manifest"
-                )
-            spark.createDataFrame(
-                [self._config_row()], _CFG_SCHEMA
-            ).coalesce(1).write.mode("overwrite").parquet(
-                f"{self.path}/manifest"
-            )
-            return
-        r = spark.read.parquet(f"{self.path}/manifest").collect()[0]
-        pinned = (
-            r["mode"], r["num_hashes"], r["bands"], r["shingle"],
-            r["threshold"],
-        )
-        if pinned != self._config_row():
-            raise RuntimeError(
+    def _pin_manifest(self, spark) -> None:
+        pin_manifest(
+            spark,
+            f"{self.path}/manifest",
+            _CFG_SCHEMA,
+            [self._config_row()],
+            committed=lambda: dir_exists(spark, f"{self.path}/lineage"),
+            refuse=(
+                f"incremental dedup at {self.path} has committed "
+                "generations but no readable manifest; re-run against "
+                "a fresh path or restore the manifest"
+            ),
+            mismatch=lambda have, want: (
                 "incremental dedup manifest mismatch: committed config "
-                f"{pinned} != requested {self._config_row()}; band keys "
+                f"{have[0]} != requested {want[0]}; band keys "
                 "are signature slices, so appending under a different "
                 "config would poison every persisted bucket join"
-            )
-
-    def _acquire_lock(self, spark) -> None:
-        acquire_writer_lock(spark, self.path, "incremental dedup")
-
-    def _release_lock(self, spark) -> None:
-        release_writer_lock(spark, self.path)
+            ),
+        )
 
     def break_lock(self, spark) -> None:
         """Remove a stale writer lock left by a crashed append. Only safe
         when no other writer is actually running."""
-        self._release_lock(spark)
+        break_lock(spark, self.path)
 
     # -- committed state --------------------------------------------------------
-    def _lineage_rows(self, spark) -> list:
-        return read_lineage_rows(spark, self.path)
-
     def generations(self, spark) -> list[dict]:
         """Committed generations, oldest first: [{gen, n_in, n_kept,
         n_matched_old, n_clusters, run_id}]."""
@@ -237,16 +224,17 @@ class IncrementalDedup:
                 "n_clusters": int(r["n_clusters"]),
                 "run_id": r["run_id"],
             }
-            for r in self._lineage_rows(spark)
+            for r in _lineage(spark, self.path)
         ]
 
     def total_kept(self, spark) -> int:
-        return sum(int(r["n_kept"]) for r in self._lineage_rows(spark))
+        rows = _lineage(spark, self.path)
+        return sum(int(r["n_kept"]) for r in rows)
 
     def last_stream_batch_id(self, spark) -> int:
         """Highest committed ``stream_batch_id`` (folded into lineage
         ``run_id`` as ``sb<id>:<uuid>``); -1 if none."""
-        return stream_high_water(self._lineage_rows(spark))
+        return stream_high_water(_lineage(spark, self.path))
 
     def kept_ids(self, spark, gen: int | None = None):
         """DataFrame[id long] of kept documents — one generation (``gen``)
@@ -261,7 +249,7 @@ class IncrementalDedup:
         return st.select("id")
 
     def _committed_paths(self, spark, sub: str, gen: int | None = None):
-        rows = self._lineage_rows(spark)
+        rows = _lineage(spark, self.path)
         if gen is not None:
             rows = [r for r in rows if int(r["gen"]) == gen]
             if not rows:
@@ -289,7 +277,7 @@ class IncrementalDedup:
             return df
         return df.join(F.broadcast(tomb), "id", "left_anti")
 
-    # -- deletion (tombstones; shared machinery in sketches/incremental) --------
+    # -- deletion (tombstones; shared machinery in store.py) ------------------
     def _tombstones(self, spark):
         return read_tombstone_ids(spark, self.path, "id")
 
@@ -309,7 +297,7 @@ class IncrementalDedup:
         import time as _time
 
         t0 = _time.time()
-        if not _dir_exists(spark, f"{self.path}/manifest"):
+        if not has_data(spark, f"{self.path}/manifest"):
             # a mistyped path must refuse loudly, NOT create a manifest
             # pinning this handle's config and report a no-op "success"
             # while the real store keeps matching the docs
@@ -317,9 +305,8 @@ class IncrementalDedup:
                 f"no incremental dedup committed at {self.path}; "
                 "nothing to forget (open() the real store)"
             )
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark)
+        with writer_lock(spark, self.path, "incremental dedup"):
+            self._pin_manifest(spark)
             if isinstance(ids, (list, tuple)):
                 ids_df = spark.createDataFrame(
                     [(i,) for i in ids], "id string"
@@ -336,8 +323,6 @@ class IncrementalDedup:
             id_type = spark.read.parquet(paths[0]).schema["id"].dataType
             ids_df = align_tombstone_ids(ids_df, "id", id_type)
             return commit_tombstone_generation(spark, self.path, ids_df, t0)
-        finally:
-            self._release_lock(spark)
 
     # -- signatures / verification ----------------------------------------------
     def _signatures(self, df, id_col: str, content_col: str):
@@ -390,24 +375,25 @@ class IncrementalDedup:
         redone."""
         t0 = time.time()
         spark = df.sparkSession
-        # lock BEFORE the manifest check (see acquire_writer_lock)
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark)
+        # lock BEFORE the manifest check (see store.writer_lock)
+        with writer_lock(spark, self.path, "incremental dedup"):
+            self._pin_manifest(spark)
             return self._append_locked(
                 df, id_col, content_col, t0, stream_batch_id
             )
-        finally:
-            self._release_lock(spark)
 
     def _append_locked(self, df, id_col, content_col, t0, stream_batch_id):
         from pyspark.sql import functions as F
 
         spark = df.sparkSession
         if stream_batch_id is not None:
-            prev = self._replayed_gen(spark, stream_batch_id)
-            if prev is not None:
-                gen, row = prev
+            # exact marker match, not the high-water mark: the replay must
+            # return THIS batch's kept set (store.stream_batch_row)
+            row = stream_batch_row(
+                _lineage(spark, self.path), stream_batch_id
+            )
+            if row is not None:
+                gen = int(row["gen"])
                 live_ids = self.kept_ids(spark, gen)
                 kept = df.join(
                     live_ids.withColumnRenamed("id", id_col),
@@ -430,7 +416,7 @@ class IncrementalDedup:
                 }
                 return kept, m
 
-        lineage = self._lineage_rows(spark)
+        lineage = _lineage(spark, self.path)
         gen = int(lineage[-1]["gen"]) + 1 if lineage else 0
 
         sig = self._signatures(df, id_col, content_col).withColumnRenamed(
@@ -557,9 +543,7 @@ class IncrementalDedup:
         _band_rows(kept_sigs, "id", self.num_hashes, self.bands).select(
             "band", "band_key", "id"
         ).write.mode("overwrite").parquet(f"{gdir}/bands")
-        run_id = uuid.uuid4().hex
-        if stream_batch_id is not None:
-            run_id = f"sb{int(stream_batch_id)}:{run_id}"
+        run_id = new_run_id(stream_batch_id)
         wall = time.time() - t0
         spark.createDataFrame(
             [(gen, n_in, n_kept, n_matched_old, n_clusters, run_id, wall)],
@@ -602,12 +586,12 @@ class IncrementalDedup:
         against the consolidated path still skips replayed batches.
         The old path is left untouched (same contract as
         ``IncrementalMPHF.compact``: consumers repoint when ready)."""
-        self._check_or_write_manifest(spark)
-        rows = self._lineage_rows(spark)
+        self._pin_manifest(spark)
+        rows = _lineage(spark, self.path)
         if not rows:
             raise RuntimeError(f"nothing committed at {self.path}")
         new_path = new_path.rstrip("/")
-        if _dir_exists(spark, f"{new_path}/lineage"):
+        if dir_exists(spark, f"{new_path}/lineage"):
             raise RuntimeError(
                 f"consolidate target {new_path} already has committed "
                 "generations; use a fresh path"
@@ -622,7 +606,7 @@ class IncrementalDedup:
             bucket_cap=self.bucket_cap,
             state_bucket_cap=self.state_bucket_cap,
         )
-        new._check_or_write_manifest(spark)
+        new._pin_manifest(spark)
         t0 = time.time()
         # reads go through _state: consolidation is where tombstoned
         # rows are physically dropped (the new store starts clean)
@@ -634,26 +618,9 @@ class IncrementalDedup:
         n_kept = spark.read.parquet(f"{new_path}/gen=0/sigs").count()
         n_in = sum(int(r["n_in"]) for r in rows)
         hw = self.last_stream_batch_id(spark)
-        run_id = uuid.uuid4().hex
-        if hw >= 0:
-            run_id = f"sb{hw}:{run_id}"
+        run_id = new_run_id(hw if hw >= 0 else None)
         spark.createDataFrame(
             [(0, n_in, n_kept, 0, 0, run_id, time.time() - t0)],
             _LIN_SCHEMA,
         ).write.mode("append").parquet(f"{new_path}/lineage")
         return new
-
-    def _replayed_gen(self, spark, stream_batch_id: int):
-        """(gen, lineage_row) of the generation a replayed micro-batch
-        already committed as, else None — EXACT ``sb<id>:`` marker match
-        only. An id at or below the high-water mark with no marker can
-        only be a batch whose original run committed nothing (empty
-        batches commit no lineage row); re-appending it is a natural
-        no-op, whereas a high-water-mark fallback would return ANOTHER
-        batch's metrics and make the streaming wrapper write a spurious
-        output slot."""
-        for r in self._lineage_rows(spark):
-            rid = r["run_id"] or ""
-            if rid.startswith(f"sb{int(stream_batch_id)}:"):
-                return int(r["gen"]), r
-        return None

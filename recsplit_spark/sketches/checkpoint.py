@@ -35,6 +35,7 @@ import time
 
 import pandas as pd
 
+from ..store import has_data, pin_manifest, read_lineage_rows
 from .base import MergeableSketch
 
 #: fixed salt decorrelating the wave router from every sketch's own hashing
@@ -47,21 +48,18 @@ def _wave_expr(col: str, waves: int):
     return F.pmod(F.xxhash64(F.col(col).cast("string"), F.lit(WAVE_SALT)), F.lit(waves))
 
 
+#: per-wave lineage + metrics row, appended after the wave's states
+_METRICS_SCHEMA = (
+    "wave int, n_rows long, n_states long, lineage string, wall_sec double"
+)
+
+
 def _committed_waves(spark, path: str) -> set[int]:
-    try:
-        rows = spark.read.parquet(f"{path}/metrics").select("wave").distinct().collect()
-        return {int(r["wave"]) for r in rows}
-    except Exception:  # noqa: BLE001 — first run: no metrics dir yet
-        return set()
-
-
-def _has_states(spark, path: str) -> bool:
-    try:
-        return (
-            spark.read.parquet(f"{path}/states").limit(1).count() > 0
-        )
-    except Exception:  # noqa: BLE001 — no states dir yet
-        return False
+    """Waves with a metrics row — the committed set (``store.py``)."""
+    rows = read_lineage_rows(
+        spark, path, "metrics", "wave", schema=_METRICS_SCHEMA
+    )
+    return {int(r["wave"]) for r in rows}
 
 
 def _sketch_fingerprint(sk: MergeableSketch) -> str:
@@ -104,7 +102,7 @@ class CheckpointedBuild:
         spark = df.sparkSession
         sk = self.sketch
         sk._check_ngram(ngram)
-        self._check_or_write_manifest(spark, path, ngram)
+        self._pin_manifest(spark, path, ngram)
         done = _committed_waves(spark, path)
         run_id = f"run-{int(time.time())}"
         committed = 0
@@ -157,16 +155,14 @@ class CheckpointedBuild:
                         round(time.time() - t0, 3),
                     )
                 ],
-                "wave int, n_rows long, n_states long, lineage string, wall_sec double",
+                _METRICS_SCHEMA,
             ).write.mode("append").parquet(f"{path}/metrics")
             committed += 1
             if _stop_after is not None and committed >= _stop_after:
                 return None  # simulated crash: waves committed so far persist
         return self.merged_state(spark, path)
 
-    def _check_or_write_manifest(
-        self, spark, path: str, ngram: int | None = None
-    ) -> None:
+    def _pin_manifest(self, spark, path: str, ngram: int | None) -> None:
         """Pin (waves, sketch fingerprint, ngram feed) at first commit;
         raise on resume mismatch.
 
@@ -178,54 +174,47 @@ class CheckpointedBuild:
         a changed sketch config: states/wave=* would be folded into an
         incompatible (or worse, compatible-looking) state. Both are user-
         plausible re-runs (the CLI exposes --waves), so they must fail
-        loudly, not proceed."""
+        loudly, not proceed. A path with committed waves but no manifest
+        (pre-manifest checkpoint, or a lost manifest) is refused; checked
+        against BOTH the metrics and the states dirs, so losing
+        metrics+manifest while states/wave=* survive is refused too.
+        Pre-ngram manifests lack the ``ngram`` column: those checkpoints
+        were scalar-feed builds, so they pin ngram=None."""
         fp = _sketch_fingerprint(self.sketch)
-        try:
-            row = spark.read.parquet(f"{path}/manifest").collect()[0]
-        except Exception:  # noqa: BLE001 — no readable manifest
-            # A missing manifest is only a FIRST run if nothing is
-            # committed yet. A path with committed waves but no manifest
-            # (pre-manifest checkpoint, or a manifest lost to corruption)
-            # must NOT be silently adopted under the resume's settings —
-            # that is precisely the waves-mismatch hole the manifest
-            # exists to close. Checked against BOTH the metrics dir and
-            # the states dirs: losing metrics+manifest while states/wave=*
-            # survive would otherwise re-fold over orphaned wave dirs that
-            # merged_state still reads (review finding).
-            if _committed_waves(spark, path) or _has_states(spark, path):
-                raise ValueError(
-                    f"checkpoint at {path} has committed waves but no "
-                    "readable manifest (pre-manifest checkpoint or corrupt "
-                    "manifest); re-run against a fresh path, or restore the "
-                    "manifest recording the original waves + sketch config"
-                ) from None
-            spark.createDataFrame(
-                [(int(self.waves), fp, int(ngram or 0))],
-                "waves int, fingerprint string, ngram int",
-            ).write.mode("overwrite").parquet(f"{path}/manifest")
-            return
-        # pre-ngram manifests lack the column: those checkpoints were
-        # scalar-feed builds, so they pin ngram=None
-        committed_ngram = (
-            int(row["ngram"]) if "ngram" in row.__fields__ else 0
-        )
-        if (
-            int(row["waves"]) != self.waves
-            or row["fingerprint"] != fp
-            or committed_ngram != int(ngram or 0)
-        ):
-            raise ValueError(
+        pin_manifest(
+            spark,
+            f"{path}/manifest",
+            "waves int, fingerprint string, ngram int",
+            [(int(self.waves), fp, int(ngram or 0))],
+            committed=lambda: has_data(spark, f"{path}/metrics")
+            or has_data(spark, f"{path}/states"),
+            refuse=(
+                f"checkpoint at {path} has committed waves but no "
+                "readable manifest (pre-manifest checkpoint or corrupt "
+                "manifest); re-run against a fresh path, or restore the "
+                "manifest recording the original waves + sketch config"
+            ),
+            mismatch=lambda have, _want: (
                 "checkpoint manifest mismatch: committed build used "
-                f"waves={row['waves']} fingerprint={row['fingerprint']} "
-                f"ngram={committed_ngram or None}, resume requested "
+                f"waves={have[0][0]} fingerprint={have[0][1]} "
+                f"ngram={have[0][2] or None}, resume requested "
                 f"waves={self.waves} fingerprint={fp} ngram={ngram}; "
                 "resume with the original settings or use a fresh path"
-            )
+            ),
+            defaults={"ngram": 0},
+        )
 
     def merged_state(self, spark, path: str):
-        """Merge every committed state under ``path`` (order-independent)."""
+        """Merge every committed wave's states under ``path`` (order-
+        independent). Wave dirs without a metrics row are crash orphans:
+        invisible here, replaced by the next ``run``."""
         sk = self.sketch
-        states = spark.read.parquet(f"{path}/states")
+        waves = sorted(_committed_waves(spark, path))
+        if not waves:
+            raise ValueError(f"no committed waves under {path}")
+        states = spark.read.parquet(
+            *[f"{path}/states/wave={w}" for w in waves]
+        )
 
         def _pre(batches):
             st = None

@@ -19,17 +19,13 @@ io.py); on plain parquet directories (this sandbox) this module keeps its
 own processed-file manifest, which doubles as the lineage/metrics record
 (file, generation, rows folded, run id, wall seconds).
 
-Commit protocol (mirrors sketches/checkpoint.py's crash-window analysis):
-the new state table is written to ``<path>/state/gen=<g>`` FIRST
-(parquet job commit is atomic), then the processed-file rows are appended
+Commit protocol (``store.py``): the new state table is written to
+``<path>/state/gen=<g>`` FIRST, then the processed-file rows are appended
 to ``<path>/lineage``. The committed generation is defined by the
 lineage table, so a crash between the two writes leaves an orphaned
 ``gen`` directory that the next update ignores (its files still read as
-unprocessed) and overwrites. A config manifest pins (keys, spec names,
-sketch fingerprints, columns, ngram feeds) at first commit and refuses
-mismatched resumes — a state table folded under one config must never be
-extended under another (same failure mode as the checkpoint manifests:
-count checks pass, estimates silently lie).
+unprocessed) and overwrites. The manifest pins (keys, spec names, sketch
+fingerprints, columns, ngram feeds) at first commit.
 
 Reference analogue: minperf processes key sets too large for one pass as
 resumable chunked runs (LargeSetTest.java chunked 10^8 builds); the
@@ -45,6 +41,14 @@ import uuid
 import numpy as np
 import pandas as pd
 
+from ..store import (
+    break_lock,
+    dir_exists,
+    fs_for,
+    has_data,
+    pin_manifest,
+    writer_lock,
+)
 from .base import MergeableSketch
 from .checkpoint import _sketch_fingerprint
 from .multi import SketchSpec, profile_by_key
@@ -94,152 +98,8 @@ def _qualify_input(spark, f: str, known: set) -> str:
     c = _canon_file(f)
     if c in known:
         return c
-    fs, p, _ = _fs_for(spark, f)
+    fs, p, _ = fs_for(spark, f)
     return _canon_file(fs.makeQualified(p).toString())
-
-
-def _fs_for(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _dir_exists(spark, path: str) -> bool:
-    fs, p, _ = _fs_for(spark, path)
-    return bool(fs.exists(p))
-
-
-def acquire_writer_lock(spark, path: str, what: str) -> None:
-    """Best-effort single-writer guard shared by the incremental family:
-    atomically create ``<path>/_lock`` (``FileSystem.create(overwrite=
-    False)`` — atomic on HDFS/local; object stores without atomic create
-    should gate writers externally, as with any non-catalog table
-    format). Writers must take this BEFORE touching the config manifest:
-    two racing first-appends could otherwise each see no manifest, one
-    pin its config, and the other commit payload under a different one —
-    a poisoning the per-structure manifests exist to prevent."""
-    fs, _, jvm = _fs_for(spark, path)
-    lock = jvm.org.apache.hadoop.fs.Path(f"{path}/_lock")
-    try:
-        out = fs.create(lock, False)
-        out.close()
-    except Exception as e:
-        # only an existing-lock failure means "locked" — a transient IO
-        # or permission error must NOT advise break_lock(): following
-        # that advice against a LIVE lock is exactly the silent
-        # lost-batch the lock exists to prevent
-        java = getattr(e, "java_exception", None)
-        jname = java.getClass().getName() if java is not None else ""
-        jmsg = str(java.getMessage() or "") if java is not None else str(e)
-        if "AlreadyExists" in jname or "already exists" in jmsg.lower():
-            raise RuntimeError(
-                f"{what} at {path} is locked by another writer (_lock "
-                "exists); if a previous run crashed, remove the stale "
-                "lock with break_lock()"
-            ) from None
-        raise
-
-
-def release_writer_lock(spark, path: str) -> None:
-    fs, _, jvm = _fs_for(spark, path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_lock"), False)
-
-
-def read_lineage_rows(spark, path: str) -> list:
-    """Committed lineage rows at ``<path>/lineage``, sorted by gen
-    ([] if nothing committed) — the committed-set definition shared by
-    IncrementalMPHF / IncrementalDedup / IncrementalANN."""
-    if not _dir_exists(spark, f"{path}/lineage"):
-        return []
-    rows = spark.read.parquet(f"{path}/lineage").collect()
-    return sorted(rows, key=lambda r: r["gen"])
-
-
-def stream_high_water(rows) -> int:
-    """Highest structured-streaming batch id committed in lineage
-    ``run_id`` markers (``sb<id>:<uuid>``); -1 if none. The marker is
-    folded into the lineage row so it commits ATOMICALLY with the
-    generation it guards."""
-    best = -1
-    for r in rows:
-        rid = r["run_id"] or ""
-        if rid.startswith("sb"):
-            head = rid[2:].split(":", 1)[0]
-            if head.isdigit():
-                best = max(best, int(head))
-    return best
-
-
-#: tombstone lineage schema shared by the deletable structures
-#: (IncrementalDedup, IncrementalANN)
-TOMB_SCHEMA = "gen int, n long, run_id string, wall_s double"
-
-
-def read_tombstone_rows(spark, path: str) -> list:
-    """Committed tombstone-lineage rows (sorted by gen), or []."""
-    if not _dir_exists(spark, f"{path}/tombstone_lineage"):
-        return []
-    return sorted(
-        spark.read.parquet(f"{path}/tombstone_lineage").collect(),
-        key=lambda r: int(r["gen"]),
-    )
-
-
-def read_tombstone_ids(spark, path: str, id_col: str):
-    """Distinct tombstoned ids as DataFrame[id_col], or None if nothing
-    was ever deleted (the common case pays zero extra plan nodes)."""
-    rows = read_tombstone_rows(spark, path)
-    if not rows:
-        return None
-    paths = [
-        f"{path}/tombstones/gen={int(r['gen'])}"
-        for r in rows
-        if int(r["n"]) > 0
-    ]
-    if not paths:
-        return None
-    return spark.read.parquet(*paths).select(id_col).distinct()
-
-
-def align_tombstone_ids(ids_df, id_col: str, id_type):
-    """try_cast incoming ids to the store's id type; REFUSE malformed
-    values — a type-mismatched tombstone table poisons every later
-    anti-join far from the cause (the shared guard both deletable
-    structures apply before committing)."""
-    from pyspark.sql import functions as F
-
-    casted = ids_df.select(
-        F.col(ids_df.columns[0]).try_cast(id_type).alias(id_col)
-    ).localCheckpoint()  # pin ONE evaluation: the null check below and
-    # the later count+write must see the same rows, or a
-    # nondeterministic ids_df (sample(), a re-read of a mutating table)
-    # sneaks a malformed id past the guard on re-evaluation
-    if casted.filter(F.col(id_col).isNull()).count():
-        raise ValueError(
-            f"ids do not cast to the store's id type "
-            f"{id_type.simpleString()}; refusing to write a "
-            "type-mismatched tombstone table"
-        )
-    return casted.distinct()
-
-
-def commit_tombstone_generation(spark, path: str, ids_df, t0: float) -> dict:
-    """Payload-then-lineage tombstone commit (same crash discipline as
-    the structures' appends): writes ``<path>/tombstones/gen=K`` then
-    appends the tombstone-lineage row. ``ids_df`` must already be
-    type-aligned and distinct. Returns the delete metrics dict."""
-    n = ids_df.count()
-    rows = read_tombstone_rows(spark, path)
-    gen = int(rows[-1]["gen"]) + 1 if rows else 0
-    wall = time.time() - t0
-    if n > 0:
-        ids_df.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/tombstones/gen={gen}"
-        )
-        spark.createDataFrame(
-            [(gen, n, uuid.uuid4().hex, wall)], TOMB_SCHEMA
-        ).write.mode("append").parquet(f"{path}/tombstone_lineage")
-    return {"gen": gen if n > 0 else None, "n": int(n), "wall_s": wall}
 
 
 def _list_data_files_raw(spark, source: str) -> dict[str, str]:
@@ -251,7 +111,7 @@ def _list_data_files_raw(spark, source: str) -> dict[str, str]:
     READER must get the raw path — a file literally named
     ``a%20b.parquet`` decodes to ``a b.parquet``, which does not
     exist."""
-    fs, root, _ = _fs_for(spark, source)
+    fs, root, _ = fs_for(spark, source)
     out: dict[str, str] = {}
     stack = [root]
     while stack:
@@ -389,49 +249,36 @@ class IncrementalProfile:
             for s in self.specs
         )
 
-    def _check_or_write_manifest(self, spark) -> None:
+    def _pin_manifest(self, spark) -> None:
         rows = self._config_rows()
-        schema = "keys string, name string, fingerprint string, col string, ngram int"
-        # "first run" is decided by directory EXISTENCE, never by a read
-        # failure: a transient IO error on an existing manifest/lineage
-        # must propagate, not silently re-adopt the path as fresh (which
-        # would overwrite the manifest and re-fold everything, doubling
-        # lineage rows).
-        if not _dir_exists(spark, f"{self.path}/manifest"):
-            if self._committed_gen(spark) > 0 or _dir_exists(
-                spark, f"{self.path}/state"
-            ):
-                # Like the checkpoint manifests: a path with committed
-                # work but no manifest must not be silently adopted
-                # under the current config.
-                raise ValueError(
-                    f"incremental profile at {self.path} has committed "
-                    "generations but no readable manifest; re-run against "
-                    "a fresh path or restore the manifest"
-                )
-            spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
-                f"{self.path}/manifest"
-            )
-            return
-        have = sorted(
-            tuple(r) for r in spark.read.parquet(f"{self.path}/manifest")
-            .select("keys", "name", "fingerprint", "col", "ngram")
-            .collect()
-        )
-        have = [(r[0], r[1], r[2], r[3], int(r[4])) for r in have]
-        if have != rows:
-            raise ValueError(
+        pin_manifest(
+            spark,
+            f"{self.path}/manifest",
+            "keys string, name string, fingerprint string, col string,"
+            " ngram int",
+            rows,
+            # a path with committed work but no manifest must not be
+            # silently adopted under the current config
+            committed=lambda: self._committed_gen(spark) > 0
+            or dir_exists(spark, f"{self.path}/state"),
+            refuse=(
+                f"incremental profile at {self.path} has committed "
+                "generations but no readable manifest; re-run against "
+                "a fresh path or restore the manifest"
+            ),
+            mismatch=lambda have, want: (
                 "incremental profile manifest mismatch: committed config "
-                f"{have} != requested {rows}; update with the original "
-                "specs/keys or use a fresh path"
-            )
+                f"{sorted(have)} != requested {want}; update with the "
+                "original specs/keys or use a fresh path"
+            ),
+        )
 
     def _committed_gen(self, spark) -> int:
         from pyspark.sql import functions as F
 
         best = 0
         for tab in ("lineage", "forget_lineage"):
-            if not _dir_exists(spark, f"{self.path}/{tab}"):
+            if not has_data(spark, f"{self.path}/{tab}"):
                 continue
             row = (
                 spark.read.parquet(f"{self.path}/{tab}")
@@ -442,22 +289,10 @@ class IncrementalProfile:
         return best
 
     # -- writer lock ---------------------------------------------------------
-    def _acquire_lock(self, spark) -> None:
-        """Single-writer guard (shared ``acquire_writer_lock``): two
-        overlapping updates would both read the same committed
-        generation and the second state write would silently drop the
-        first's batch while its lineage rows mark the files processed —
-        the one failure the commit protocol cannot detect after the
-        fact."""
-        acquire_writer_lock(spark, self.path, "incremental profile")
-
-    def _release_lock(self, spark) -> None:
-        release_writer_lock(spark, self.path)
-
     def break_lock(self, spark) -> None:
         """Remove a stale writer lock left by a crashed update. Only
         safe when no other writer is actually running."""
-        self._release_lock(spark)
+        break_lock(spark, self.path)
 
     # -- update --------------------------------------------------------------
     def update(self, spark, source: str | None = None,
@@ -471,20 +306,17 @@ class IncrementalProfile:
         (nothing new) leaves the committed generation untouched.
 
         Single-writer: a ``<path>/_lock`` file guards the whole
-        read-fold-commit sequence (see ``_acquire_lock``); concurrent
+        read-fold-commit sequence (``store.writer_lock``); concurrent
         updates raise instead of silently losing a batch."""
         if (source is None) == (files is None):
             raise ValueError("pass exactly one of source= or files=")
         t0 = time.time()
         # lock BEFORE the manifest check: racing first-updates could
         # otherwise pin one config while the other commits gen 0 under a
-        # different one (see acquire_writer_lock)
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark)
+        # different one (see store.writer_lock)
+        with writer_lock(spark, self.path, "incremental profile"):
+            self._pin_manifest(spark)
             return self._update_locked(spark, source, files, t0)
-        finally:
-            self._release_lock(spark)
 
     def _update_locked(self, spark, source, files, t0) -> dict:
         from pyspark.sql import functions as F
@@ -555,11 +387,10 @@ class IncrementalProfile:
         from."""
         if keep < 1:
             raise ValueError("keep must be >= 1")
-        self._acquire_lock(spark)
-        try:
+        with writer_lock(spark, self.path, "incremental profile"):
             cur = self._committed_gen(spark)
             cutoff = cur - (keep - 1)
-            fs, _, jvm = _fs_for(spark, self.path)
+            fs, _, jvm = fs_for(spark, self.path)
             dropped = []
             state_root = jvm.org.apache.hadoop.fs.Path(f"{self.path}/state")
             if not fs.exists(state_root):
@@ -575,8 +406,6 @@ class IncrementalProfile:
                     fs.delete(st.getPath(), True)
                     dropped.append(g)
             return sorted(dropped)
-        finally:
-            self._release_lock(spark)
 
     # -- forget (right-to-be-forgotten, file granularity) ---------------------
     def _folded_files(self, spark, g: int) -> set[str]:
@@ -584,7 +413,7 @@ class IncrementalProfile:
         generation ``g``: a file counts iff its latest lineage event at
         gen <= g is a fold, not a forget (files can be forgotten and
         later re-folded, so per-file event ORDER decides)."""
-        if not _dir_exists(spark, f"{self.path}/lineage"):
+        if not has_data(spark, f"{self.path}/lineage"):
             return set()
         last_fold: dict[str, int] = {}
         for r in (
@@ -596,7 +425,7 @@ class IncrementalProfile:
                 f = r["file"]
                 last_fold[f] = max(last_fold.get(f, 0), int(r["gen"]))
         last_forget: dict[str, int] = {}
-        if _dir_exists(spark, f"{self.path}/forget_lineage"):
+        if has_data(spark, f"{self.path}/forget_lineage"):
             for r in (
                 spark.read.parquet(f"{self.path}/forget_lineage")
                 .select("file", "gen")
@@ -613,7 +442,7 @@ class IncrementalProfile:
 
     def _forget_gens(self, spark) -> list[int]:
         """Distinct generations committed by forget(), ascending."""
-        if not _dir_exists(spark, f"{self.path}/forget_lineage"):
+        if not has_data(spark, f"{self.path}/forget_lineage"):
             return []
         return sorted(
             {
@@ -677,9 +506,8 @@ class IncrementalProfile:
         from .cms import CountMinSketch
 
         t0 = time.time()
-        self._acquire_lock(spark)
-        try:
-            self._check_or_write_manifest(spark)
+        with writer_lock(spark, self.path, "incremental profile"):
+            self._pin_manifest(spark)
             cur = self._committed_gen(spark)
             if cur == 0:
                 raise ValueError(
@@ -702,7 +530,7 @@ class IncrementalProfile:
             )
 
             def _readable(f: str) -> bool:
-                fs, p, _ = _fs_for(spark, f)
+                fs, p, _ = fs_for(spark, f)
                 return bool(fs.exists(p))
 
             if not refold and all_cms and all(_readable(f) for f in want):
@@ -785,8 +613,6 @@ class IncrementalProfile:
                 "forgotten_files": len(want),
                 "mode": mode,
             }
-        finally:
-            self._release_lock(spark)
 
     # -- reads ---------------------------------------------------------------
     def generations(self, spark) -> list[int]:
@@ -795,9 +621,9 @@ class IncrementalProfile:
         Excludes an orphaned in-progress/crashed gen above the committed
         one."""
         committed = self._committed_gen(spark)
-        if committed == 0 or not _dir_exists(spark, f"{self.path}/state"):
+        if committed == 0 or not dir_exists(spark, f"{self.path}/state"):
             return []
-        fs, _, jvm = _fs_for(spark, self.path)
+        fs, _, jvm = fs_for(spark, self.path)
         root = jvm.org.apache.hadoop.fs.Path(f"{self.path}/state")
         gens = []
         for st in fs.listStatus(root):
@@ -826,7 +652,7 @@ class IncrementalProfile:
                 f"generation {gen} out of range [1, {committed}]"
             )
         path = f"{self.path}/state/gen={gen}"
-        if not _dir_exists(spark, path):
+        if not dir_exists(spark, path):
             raise ValueError(
                 f"generation {gen} was vacuumed (readable: "
                 f"{self.generations(spark)})"

@@ -104,9 +104,9 @@ def main() -> int:
         # overwrite semantics like every other state write in the repo:
         # Hadoop's pickle save refuses an existing dir, which would kill
         # a re-submitted job AFTER the full rebuild
-        from recsplit_spark.sketches.incremental import _fs_for
+        from recsplit_spark.store import fs_for
 
-        fs, p, _ = _fs_for(spark, f"{args.output}/descriptor")
+        fs, p, _ = fs_for(spark, f"{args.output}/descriptor")
         if fs.exists(p):
             fs.delete(p, True)
         sc.parallelize([bytearray(blob)], 1).saveAsPickleFile(f"{args.output}/descriptor")

@@ -50,7 +50,7 @@ def main() -> int:
     from recsplit_spark.pipeline.incremental_ann import IncrementalANN
     from recsplit_spark.pipeline.incremental_dedup import IncrementalDedup
     from recsplit_spark.session import get_spark, ship_package
-    from recsplit_spark.sketches.incremental import _dir_exists
+    from recsplit_spark.store import dir_exists
 
     spark = get_spark(app_name="forget-job")
     spark.sparkContext.setLogLevel("WARN")
@@ -72,11 +72,11 @@ def main() -> int:
         ids_df = spark.read.parquet(args.ids_parquet).select(args.id_col)
 
     m_dedup = m_ann = None
-    if _dir_exists(spark, f"{root}/dedup/lineage"):
+    if dir_exists(spark, f"{root}/dedup/lineage"):
         m_dedup = IncrementalDedup.open(spark, f"{root}/dedup").delete(
             spark, ids_df
         )
-    if _dir_exists(spark, f"{root}/ann/lineage"):
+    if dir_exists(spark, f"{root}/ann/lineage"):
         m_ann = IncrementalANN(f"{root}/ann").delete(
             spark, ids_df, id_col=ids_df.columns[0]
         )

@@ -251,9 +251,9 @@ def main() -> int:
     # --pq, the codec is fitted against it too); discovering that at
     # stage 3 would be after the dedup/ids commits.
     if args.vec_col and not args.ann_index:
-        from recsplit_spark.sketches.incremental import _dir_exists
+        from recsplit_spark.store import has_data
 
-        if not _dir_exists(spark, f"{root}/ann/manifest"):
+        if not has_data(spark, f"{root}/ann/manifest"):
             raise SystemExit(
                 "--vec-col on the FIRST ANN run requires --ann-index "
                 "(the store is created against that fitted IVFIndex; "
@@ -429,10 +429,10 @@ def main() -> int:
 
         idx = (IVFIndex.load(spark, args.ann_index)
                if args.ann_index else None)
-        from recsplit_spark.sketches.incremental import _dir_exists
+        from recsplit_spark.store import has_data
 
         codec = None
-        first_run = not _dir_exists(spark, f"{root}/ann/manifest")
+        first_run = not has_data(spark, f"{root}/ann/manifest")
         if args.pq is not None and first_run and kept.isEmpty():
             # an all-dropped first batch cannot fit a codec; creating
             # the store WITHOUT one would permanently pin codec=None
@@ -511,11 +511,11 @@ def main() -> int:
     # NOT rewritten: the content would be identical but the part-file
     # names would change, and the profile stage's processed-file
     # manifest (step 5) keys on file paths.
-    from recsplit_spark.sketches.incremental import _dir_exists
+    from recsplit_spark.store import dir_exists
 
     if args.batch_id is not None:
         out_slot = f"{args.out.rstrip('/')}/batch={args.batch_id}"
-        already = m_dedup.get("skipped_replay") and _dir_exists(
+        already = m_dedup.get("skipped_replay") and dir_exists(
             spark, f"{out_slot}/_SUCCESS"
         )
         if not already:
@@ -589,8 +589,11 @@ def main() -> int:
         cfg_schema = "capacity int, pack_mode string, tokenizer_sha string"
         # probe the _SUCCESS marker, not the bare dir (same as the step-4
         # slot check): a crash mid-manifest-write leaves a dir with no
-        # committed parquet, and the overwrite below repairs it
-        if _dir_exists(spark, f"{packed_root}/_manifest/_SUCCESS"):
+        # committed parquet, and the overwrite below repairs it. Not
+        # store.pin_manifest: tokenizer_sha is None in tokens mode and
+        # must compare as a value, where pin_manifest's None adopts the
+        # committed field (a tokens run would pass over a text-mode pin)
+        if dir_exists(spark, f"{packed_root}/_manifest/_SUCCESS"):
             r = spark.read.parquet(f"{packed_root}/_manifest").collect()[0]
             pinned = (int(r["capacity"]), r["pack_mode"], r["tokenizer_sha"])
             if pinned != pack_cfg:
@@ -615,7 +618,7 @@ def main() -> int:
         )
         if args.batch_id is not None:
             pack_slot = f"{packed_root}/batch={args.batch_id}"
-            pack_already = already and _dir_exists(
+            pack_already = already and dir_exists(
                 spark, f"{pack_slot}/_SUCCESS"
             )
             if not pack_already:

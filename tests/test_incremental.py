@@ -12,6 +12,7 @@ The load-bearing invariants:
     resumes (same failure mode as the checkpoint manifests).
 """
 
+import os
 import shutil
 
 import pytest
@@ -233,15 +234,14 @@ def test_writer_lock_blocks_concurrent_update(spark, corpus, tmp_path):
     inc = IncrementalProfile(_specs()[:1], ["source"], path)
     inc.update(spark, source=corpus["b1"])
     # a crashed/concurrent writer left the lock: update must refuse
-    inc._acquire_lock(spark)
+    open(f"{path}/_lock", "w").close()
     with pytest.raises(RuntimeError, match="locked by another writer"):
         inc.update(spark, source=corpus["b2"])
     inc.break_lock(spark)
     m = inc.update(spark, source=corpus["b2"])
     assert m["gen"] == 2
     # lock released after both success and refusal
-    inc._acquire_lock(spark)
-    inc.break_lock(spark)
+    assert not os.path.exists(f"{path}/_lock")
 
 
 def test_vacuum_drops_superseded_generations(spark, corpus, tmp_path):

@@ -206,7 +206,7 @@ def test_writer_lock(spark, tmp_path):
     path = f"{tmp_path}/dd"
     inc = IncrementalDedup(path, **CFG)
     inc.append(_df(spark, [_doc(0)]), "doc_id", "text")
-    inc._acquire_lock(spark)
+    open(f"{path}/_lock", "w").close()  # another writer holds the lock
     with pytest.raises(RuntimeError, match="locked by another writer"):
         inc.append(_df(spark, [_doc(1)]), "doc_id", "text")
     inc.break_lock(spark)

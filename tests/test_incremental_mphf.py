@@ -337,7 +337,7 @@ def test_writer_lock(spark, tmp_path):
     path = f"{tmp_path}/inc"
     inc = IncrementalMPHF(path)
     inc.append(_batch(spark, 0, 500), "k")
-    inc._acquire_lock(spark)  # another writer holds the lock
+    open(f"{path}/_lock", "w").close()  # another writer holds the lock
     with pytest.raises(RuntimeError, match="locked by another writer"):
         inc.append(_batch(spark, 500, 600), "k")
     inc.break_lock(spark)
