@@ -101,14 +101,9 @@ def _touched_frames(spark):
     sig = F.xxhash64(F.col("__key"), F.lit(0))
     sig_df = kdf.select(sig.alias("sig"))
     bucket_expr = F.shiftrightunsigned(F.col("sig"), 64 - blog2)
-    nparts = max(
-        1,
-        min(
-            2 * spark.sparkContext.defaultParallelism,
-            max(1, n_keys // 32768),
-        ),
+    nparts = min(
+        spark.sparkContext.defaultParallelism, max(1, n_keys // 32768), 1 << blog2
     )
-    nparts = min(nparts, 1 << blog2)
     build_src = inspect.getsource(RecSplitBuilder._build_once)
     if "sig_df.repartition(nparts, bucket_expr)" in build_src:
         # round-6 shape: hash repartition on the bucket expression,
@@ -210,7 +205,10 @@ def sketchfold(cores: int) -> dict:
       hll_arrow_proto  — the identical fold via mapInArrow, zero-copy
                          column -> numpy (what the library change would ship)
       kll_pandas/arrow — same A/B for the value-feed KLL build (state
-                         byte-identity asserted: same Arrow batch boundaries)
+                         byte-identity checked: same Arrow batch boundaries)
+
+    Exits non-zero when an HLL/KLL identity check fails; records the
+    partition count ``cross_only_p4`` really ran with.
 
     Round-6 result (6M rows, 32 cores, healthy window): pandas ~= arrow on
     both sketches (hll 0.876 vs 0.901, kll 1.177 vs 1.219), crossing floor
@@ -260,19 +258,20 @@ def sketchfold(cores: int) -> dict:
         "cross_only_native",
         lambda: src.mapInArrow(_cross_only, "c long").agg(F.sum("c")).collect(),
     )
+    p4 = src.coalesce(4)
+    # coalesce only merges: on a narrower input this is not a 4-task run
+    out["cross_only_p4_parts"] = p4.rdd.getNumPartitions()
     timed(
         "cross_only_p4",
-        lambda: src.coalesce(4)
-        .mapInArrow(_cross_only, "c long")
-        .agg(F.sum("c"))
-        .collect(),
+        lambda: p4.mapInArrow(_cross_only, "c long").agg(F.sum("c")).collect(),
     )
 
     def arrow_build(sk, src_df):
         def _fold(batches):
             st = None
             for b in batches:
-                arr = b.column(0).to_numpy(zero_copy_only=False)
+                # a nullable column would reach numpy as float64 NaN
+                arr = b.column(0).drop_null().to_numpy(zero_copy_only=False)
                 if st is None:
                     st = sk.new_state()
                 sk.update(st, arr)
@@ -303,6 +302,13 @@ def sketchfold(cores: int) -> dict:
     spark.sparkContext.setJobDescription(None)
     print(json.dumps(out))
     spark.stop()
+    failed = [
+        k
+        for k in ("hll_estimates_equal", "kll_states_byte_equal", "kll_quantiles_equal")
+        if not out[k]
+    ]
+    if failed:
+        sys.exit(f"sketchfold identity check failed: {', '.join(failed)}")
     return out
 
 

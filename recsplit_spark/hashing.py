@@ -32,11 +32,12 @@ def _i64(c: int) -> np.int64:
 # splitmix64 finalizer constants (public domain)
 _M1 = _i64(0xBF58476D1CE4E5B9)
 _M2 = _i64(0x94D049BB133111EB)
-# masks turning arithmetic >> into logical >> for shifts 30/27/31
+# masks turning arithmetic >> into logical >> for shifts 30/27/32
 _MASK30 = np.int64((1 << 34) - 1)
 _MASK27 = np.int64((1 << 37) - 1)
-_MASK31 = np.int64((1 << 33) - 1)
 _MASK32 = np.int64((1 << 32) - 1)
+# 31 bits, not 33: part of the pinned hash family (mix64's third stage)
+_MASK31 = np.int64((1 << 31) - 1)
 
 #: 2^64 / golden ratio — Weyl sequence increment for index expansion
 GOLDEN = _i64(0x9E3779B97F4A7C15)
@@ -61,9 +62,7 @@ def mix64_inplace(x: np.ndarray, scratch: np.ndarray | None = None) -> np.ndarra
     # stages, whose masks keep every logical-shift bit; shifts are SIMD
     # on uint64 — only multiplies need the int64 domain). Saves 2 of the
     # 11 passes in this memory-bound finalizer. The THIRD stage keeps its
-    # mask: module history shadows _MASK31 to (1<<31)-1 — narrower than
-    # the 33 logical-shift bits — and that 31-bit mask is part of the
-    # pinned hash family (persisted sketches/signatures depend on it).
+    # _MASK31, which is narrower than the 33 logical-shift bits.
     t = scratch
     xu, tu = x.view(np.uint64), scratch.view(np.uint64)
     np.right_shift(xu, np.uint64(30), out=tu)
@@ -106,9 +105,6 @@ def reduce_to(h: np.ndarray, n: int) -> np.ndarray:
     if h.dtype == np.uint64:
         h = h.view(np.int64)
     return (((h >> 32) & _MASK32) * np.int64(n)) >> 32
-
-
-_MASK31 = np.int64((1 << 31) - 1)
 
 
 def positions_inplace(buf: np.ndarray, n: int, scratch: np.ndarray | None = None) -> np.ndarray:

@@ -21,8 +21,13 @@ wavefront** (SURVEY §7 "vectorizing the trial search"):
   in descending order visits each size exactly once: total Python dispatch
   is O(distinct sizes), not O(nodes).
 * Trial batches are sized from the DP's expected trial count and grown
-  geometrically; work is chunked to an L3-resident reused workspace
-  (the kernel is memory-bound; fresh-page allocation costs ~10x).
+  geometrically; work is chunked to a per-core-L2-resident reused
+  workspace (``CHUNK_ELEMS``; the kernel is memory-bound; fresh-page
+  allocation costs ~10x).
+* Split nodes never compute positions: after the mixing round of
+  ``positions_inplace`` each cumulative part bound is one unsigned
+  compare against a per-size threshold (``_split_checks``). Leaves keep
+  the full position function.
 * Rice codes for the whole batch are emitted with one vectorized
   ``pack_bits`` call; bucket boundaries are byte-aligned by injected pad
   codes so per-bucket streams are plain byte slices (costs ~4 bits/bucket,
@@ -43,7 +48,7 @@ from __future__ import annotations
 import numpy as np
 
 from .codecs import BitReader, pack_bits
-from .hashing import GOLDEN, node_positions, positions_inplace
+from .hashing import _M1, GOLDEN, node_positions, positions_inplace
 from .settings import Settings
 
 #: hard cap on trial-batch width
@@ -92,6 +97,25 @@ def _trial_base(base: int, batch: int) -> np.ndarray:
     return np.arange(base, base + batch, dtype=np.int64) * GOLDEN
 
 
+def _split_checks(s: int, parts: tuple[int, ...]) -> list[tuple[int, np.uint64]]:
+    """(b, T) for every cumulative part bound b of a size-``s`` split but
+    the last: a key lands below b exactly when ``u < T``, where ``u`` is the
+    uint64 value after the xorshift-multiply round of ``positions_inplace``.
+
+    The reduce there is pos = ((u >> 33) * s) >> 31, so
+    pos < b  <=>  (u >> 33) * s < b * 2^31  <=>  u < ceil(b * 2^31 / s) << 33
+    (the power-of-two path u >> (64 - k) is the same formula). A trial wins
+    when exactly b keys fall below every T, so the smallest winning trial,
+    and with it every descriptor byte, is unchanged.
+    """
+    out = []
+    b = 0
+    for a in parts[:-1]:
+        b += a
+        out.append((b, np.uint64((((b << 31) + s - 1) // s) << 33)))
+    return out
+
+
 # ---------------------------------------------------------------------------
 # batched node solver: L same-size nodes at once
 # ---------------------------------------------------------------------------
@@ -117,8 +141,7 @@ def _solve_nodes(
         full = np.int64((1 << s) - 1)
         one = np.int64(1)
     else:
-        parts_arr = np.array(parts, dtype=np.int64)
-        bounds = np.cumsum(parts_arr)
+        checks = _split_checks(s, parts)
     active = np.arange(L, dtype=np.int64)
     sigs = sig_mat
     base = 0
@@ -135,22 +158,24 @@ def _solve_nodes(
             buf = _get_buf(m * s * batch).reshape(m * s, batch)
             scratch = _get_buf(m * s * batch, 1).reshape(m * s, batch)
             np.add(sigs[lo:hi].reshape(-1, 1), tb, out=buf)
-            positions_inplace(buf, s, scratch)
             if is_leaf:
+                positions_inplace(buf, s, scratch)
                 np.left_shift(one, buf, out=buf)
                 occ = np.bitwise_or.reduce(buf.reshape(m, s, batch), axis=1)
                 won = occ == full  # (m, batch)
             else:
-                view = buf.reshape(m, s, batch)
-                if len(parts) == 2:
-                    won = (view < parts[0]).sum(axis=1) == parts[0]
-                else:
-                    won = np.ones((m, batch), dtype=bool)
-                    plo = 0
-                    for j, phi in enumerate(bounds):
-                        cnt = ((view >= plo) & (view < phi)).sum(axis=1)
-                        won &= cnt == parts[j]
-                        plo = int(phi)
+                # the xorshift-multiply round of positions_inplace, then
+                # one unsigned compare per cumulative bound (no reduce)
+                np.right_shift(buf, 30, out=scratch)
+                buf ^= scratch
+                buf *= _M1
+                u = buf.view(np.uint64).reshape(m, s, batch)
+                hit = scratch.reshape(-1).view(np.bool_)[: m * s * batch]
+                hit = hit.reshape(m, s, batch)
+                won = np.ones((m, batch), dtype=bool)
+                for b, t in checks:
+                    np.less(u, t, out=hit)
+                    won &= hit.sum(axis=1, dtype=np.int32) == b
             any_won = won.any(axis=1)
             solved[lo:hi] = any_won
             win[lo:hi][any_won] = base + np.argmax(won, axis=1)[any_won]

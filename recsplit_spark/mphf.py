@@ -670,17 +670,14 @@ class RecSplitBuilder:
         spark = keys.sparkSession
         blog2 = self._bucket_log2(n)
         bc = 1 << blog2
-        # 2x parallelism: straggler smoothing (bucket-size variance makes
-        # per-partition kernel time uneven) without per-task overhead
-        # dominating — measured best at 32 cores vs 1x (stragglers) and 4x
-        # (task/Arrow fixed costs). Floored at ~32k keys per kernel task:
-        # below that the per-task fixed cost IS the build (457k keys at 64
-        # partitions measured 1.9 s vs 1.1 s at 8 — stragglers are moot
-        # when every kernel runs tens of ms); at large n the floor never
-        # binds (16M keys -> 488 >> 64).
-        nparts = self.partitions or max(
-            1,
-            min(2 * spark.sparkContext.defaultParallelism, max(1, n // 32768)),
+        # one kernel task per core: consecutive Python tasks on a reused
+        # worker pay a ~0.25-0.4 s Spark handoff, once per extra task wave.
+        # Build wall on 4 cores (median of 3) at 4 / 8 / 16 kernel tasks:
+        # 2^18 keys 1.21 / 1.68 / 2.52 s; 2^21 keys 4.14 / 4.74 / 5.48 s.
+        # Floored at ~32k keys per task: below that the per-task fixed cost
+        # IS the build (457k keys at 64 partitions: 1.9 s vs 1.1 s at 8).
+        nparts = self.partitions or min(
+            spark.sparkContext.defaultParallelism, max(1, n // 32768)
         )
         nparts = min(nparts, bc)
 
@@ -710,7 +707,7 @@ class RecSplitBuilder:
             # partitioning drops repartitionByRange's boundary-sampling
             # pass (a full extra scan computing xxhash64 over the input).
             # Bucket ids are top bits of xxhash64, so with bc >> nparts
-            # (bc = n/avg_bucket_size, nparts <= 2x cores) the hash
+            # (bc = n/avg_bucket_size, nparts <= cores) the hash
             # spreads partitions evenly. The shuffle also carries ONLY
             # the 8-byte sig — the bucket column is recomputed from it
             # after the exchange (guide: shuffle fewer bytes).

@@ -275,13 +275,9 @@ def test_finalize_scatters_interleaved_resume_rows():
     assert sorted(out.tolist()) == list(range(n))
 
 
-def test_skewed_buckets_grow_rule_table_and_biject():
-    """FIXTURES.md F1's implied skew fixture: ~5% of buckets carry 10x
-    mass. Oversized buckets must grow the rule table on demand and build
-    correctly — not fail or re-roll (the reference's overflow diversion,
-    Generator.java:465-469, re-expressed as table growth)."""
-    from recsplit_spark.mphf import MPHFDescriptor, build_descriptor_from_sigs
-
+def _f1_skew_sigs():
+    """FIXTURES.md F1's implied skew fixture over 2^7 buckets: 6 of 128
+    buckets carry 10x the mean mass."""
     rng = np.random.default_rng(31)
     blog2, bc = 7, 128
     hot = rng.choice(bc, size=6, replace=False)
@@ -292,10 +288,20 @@ def test_skewed_buckets_grow_rule_table_and_biject():
         lo = np.int64(b) << np.int64(64 - blog2)
         offs = rng.integers(0, 1 << 40, counts[b] * 2, dtype=np.int64)
         sigs.append(np.unique(lo + offs)[: counts[b]])
-    sigs = np.concatenate(sigs)
+    return np.concatenate(sigs)
+
+
+def test_skewed_buckets_grow_rule_table_and_biject():
+    """FIXTURES.md F1's implied skew fixture: ~5% of buckets carry 10x
+    mass. Oversized buckets must grow the rule table on demand and build
+    correctly — not fail or re-roll (the reference's overflow diversion,
+    Generator.java:465-469, re-expressed as table growth)."""
+    from recsplit_spark.mphf import MPHFDescriptor, build_descriptor_from_sigs
+
+    sigs = _f1_skew_sigs()
     n = len(sigs)
     desc = build_descriptor_from_sigs(sigs, 8, 128)
-    assert desc.bucket_log2 == blog2  # the skew landed where engineered
+    assert desc.bucket_log2 == 7  # the skew landed where engineered
     sizes = np.diff(desc.offsets)
     assert sizes.max() >= 800
     rt = MPHFDescriptor.from_bytes(desc.to_bytes())
@@ -393,3 +399,120 @@ def test_extreme_space_rule_generation_3():
     c = Settings(8, initial_max=600, rule_gen=3)
     assert a.parts == c.parts and a.rice_k == c.rice_k
     assert LARGE_LEAF > 8
+
+
+def _by_top_bits(sigs, blog2):
+    """Bucket = top ``blog2`` bits of the signature (RecSplitBuilder's rule),
+    keys grouped by bucket as ``build_buckets`` expects."""
+    b = (sigs.view(np.uint64) >> np.uint64(64 - blog2)).astype(np.int64)
+    o = np.argsort(b, kind="stable")
+    return b[o], sigs[o]
+
+
+def _golden_uniform(avg, seed):
+    rng = np.random.default_rng(seed)
+    sigs = np.unique(rng.integers(-(2**63), 2**63, 1 << 15, dtype=np.int64))
+    return _by_top_bits(sigs, (len(sigs) // avg).bit_length() - 1)
+
+
+#: sha256 of (blob, bit_lens || byte_lens as little-endian int64) per fixture
+_GOLDEN = {
+    "avg128": (
+        "9a6f8f30c399fa327ce459268b6739aa025e495ecc38bd3dfa54c8fba9f52a9b",
+        "6c6af1e88347cdecd403468c1bbde8bff30b056804b2cd04c72c47a7d9a5f010",
+    ),
+    "avg8": (
+        "1a181bb9635a8b7a7969b3099fd90d79b8ad411b7495883df15dcc2f174ccdb5",
+        "614cac1058fe4fe76a9811c9d9fe5a7872c5d0de0741ed61b620359190c3a498",
+    ),
+    "skew": (
+        "cd386f43bc8e594bebd514138c7e2559a47771d6c87ec7c26f30c37b8440e38a",
+        "9ee787d5103462776278ce69c6e81754abc2f8e44b7e98ffa43605393377c8fb",
+    ),
+}
+
+
+def test_build_buckets_golden_bytes(st8):
+    """The descriptor bytes are a wire format: any change to the trial
+    search must find the same smallest winning trial at every node. Pins
+    the blob and the per-bucket lengths of three seeded leaf-8 batches
+    whose split trees cover 2-, 3- and 4-part splits, including the
+    power-of-two size 32."""
+    import hashlib
+
+    fixtures = {
+        "avg128": _golden_uniform(128, 128),
+        "avg8": _golden_uniform(8, 8),
+        "skew": _by_top_bits(_f1_skew_sigs(), 7),
+    }
+    split_sizes = set()
+    for name, (bids, sigs) in fixtures.items():
+        uniq, n_keys, bit_lens, byte_lens, blob = build_buckets(bids, sigs, st8)
+        lens = np.concatenate([bit_lens, byte_lens]).astype("<i8").tobytes()
+        got = (hashlib.sha256(blob).hexdigest(), hashlib.sha256(lens).hexdigest())
+        assert got == _GOLDEN[name], name
+        stack = [int(s) for s in np.unique(n_keys)]
+        while stack:
+            s = stack.pop()
+            if st8.parts[s] and s not in split_sizes:
+                split_sizes.add(s)
+                stack.extend(st8.parts[s])
+    assert {21, 24, 28, 32, 63, 72} <= split_sizes
+    assert {len(st8.parts[s]) for s in split_sizes} == {2, 3, 4}
+
+
+_U64 = (1 << 64) - 1
+_M1_U64 = 0xBF58476D1CE4E5B9
+
+
+def _round_preimage(u):
+    """int ``x`` whose xorshift-multiply round in ``positions_inplace``
+    (``x ^= x >> 30`` arithmetic, ``x *= M1``) yields uint64 ``u``, or None.
+    The arithmetic-shift xor always clears bit 63, so only half of all
+    ``u`` are reachable; a reachable ``u`` has a non-negative preimage."""
+    y = (u * pow(_M1_U64, -1, 1 << 64)) & _U64
+    if y >> 63:
+        return None
+    x = y ^ (y >> 30) ^ (y >> 60)
+    assert ((x ^ (x >> 30)) * _M1_U64) & _U64 == u
+    return x
+
+
+def test_split_thresholds_match_positions(st8):
+    """The split-node search tests ``u < T`` instead of computing
+    positions; it must agree with ``positions_inplace(x, s) < b`` for every
+    split size and cumulative bound, at the threshold boundaries
+    (T-1, T, T+1), at 0 and 2^64-1, and on random values."""
+    from recsplit_spark.hashing import positions_inplace
+    from recsplit_spark.kernel import _split_checks
+
+    st8.ensure(768)
+    sizes = [s for s in range(769) if st8.parts[s]]
+    assert {16, 32, 64, 128, 256, 512} <= set(sizes)  # power-of-two path
+    rng = np.random.default_rng(41)
+    for s in sizes:
+        checks = _split_checks(s, st8.parts[s])
+        assert [b for b, _ in checks] == list(np.cumsum(st8.parts[s])[:-1])
+        # exact integer check of the Lemire reduce at the edges
+        for b, t in checks:
+            t = int(t)
+            for u in (t - 1, t, t + 1, 0, _U64):
+                assert ((((u >> 33) * s) >> 31) < b) == (u < t), (s, b, u)
+        # the same through positions_inplace, on reachable round outputs:
+        # the edges where reachable, plus the nearest reachable on each side
+        us = [0, _U64]
+        for _b, t in checks:
+            t = int(t)
+            near = [u for u in range(t - 64, t + 64) if _round_preimage(u) is not None]
+            us += [u for u in near if t - 1 <= u <= t + 1]
+            us += [max(u for u in near if u < t), min(u for u in near if u >= t)]
+        x = np.array([_round_preimage(u) for u in us], dtype=np.int64)
+        u = np.array(us, dtype=np.uint64)
+        rx = rng.integers(-(2**63), 2**63, 256, dtype=np.int64)
+        ru = rx ^ (rx >> 30)
+        ru *= np.int64(_M1_U64 - (1 << 64))
+        x = np.concatenate([x, rx])
+        u = np.concatenate([u, ru.view(np.uint64)])
+        pos = positions_inplace(x.copy(), s)
+        for b, t in checks:
+            assert ((u < t) == (pos < b)).all(), (s, b)
