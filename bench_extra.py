@@ -92,12 +92,12 @@ def _touched_frames(spark):
     import inspect
 
     builder = RecSplitBuilder(leaf_size=8, avg_bucket_size=128)
-    from recsplit_spark.mphf import key_mode_for
+    from recsplit_spark.mphf import bucket_log2_for, key_mode_for
 
     km = key_mode_for(keys, "pk")
     cast_t = "long" if km == 1 else "string"
     kdf = keys_ck.select(F.col("pk").cast(cast_t).alias("__key"))
-    blog2 = builder._bucket_log2(n_keys)
+    blog2 = bucket_log2_for(n_keys, builder.avg_bucket_size)
     sig = F.xxhash64(F.col("__key"), F.lit(0))
     sig_df = kdf.select(sig.alias("sig"))
     bucket_expr = F.shiftrightunsigned(F.col("sig"), 64 - blog2)

@@ -366,7 +366,8 @@ class MPHFDescriptor:
         JVM-side, so the output schema is unchanged.
 
         ``coalesce``: partition-count discipline for the Arrow stage. The
-        walk itself is no longer the limiter (225 ns/key single-core);
+        walk itself is no longer the limiter (~140 ns/key on one core at
+        leaf 8 / avg bucket 128, ``evaluate.VectorEvaluator``);
         the residual end-to-end cost is PER-TASK Arrow transport overhead,
         so many small partitions lose to few large ones (round-3
         controls: 16M keys at 48 partitions beat 128 by 1.6x on 32
@@ -378,8 +379,6 @@ class MPHFDescriptor:
         inputs pass through unchanged.
         """
         from pyspark.sql import functions as F
-        from pyspark.sql.functions import arrow_udf
-        from pyspark.sql.types import IntegerType, LongType
 
         if self.n == 0:  # empty key set: any result is unspecified
             return df.withColumn(out_col, F.lit(0).cast("long"))
@@ -388,31 +387,10 @@ class MPHFDescriptor:
             coalesce = max(2, (3 * spark.sparkContext.defaultParallelism) // 2)
         if coalesce is not None:
             df = df.coalesce(int(coalesce))
-        bcast = self._broadcast_evaluator(spark)
-        narrow = self.n <= (1 << 31)
-
-        if narrow:
-
-            @arrow_udf(IntegerType())
-            def _mphf_eval(sig: pa.Array) -> pa.Array:
-                sigs = np.ascontiguousarray(
-                    sig.to_numpy(zero_copy_only=False), dtype=np.int64
-                )
-                out = bcast.value.evaluate(sigs)
-                return pa.array(out.astype(np.int32), type=pa.int32())
-
-        else:
-
-            @arrow_udf(LongType())
-            def _mphf_eval(sig: pa.Array) -> pa.Array:
-                sigs = np.ascontiguousarray(
-                    sig.to_numpy(zero_copy_only=False), dtype=np.int64
-                )
-                return pa.array(bcast.value.evaluate(sigs), type=pa.int64())
-
+        walk = _walk_udf(self._broadcast_evaluator(spark), self.n <= (1 << 31))
         return df.withColumn(
             out_col,
-            _mphf_eval(key_sig_expr(key_col, self.salt, self.key_mode)).cast("long"),
+            walk(key_sig_expr(key_col, self.salt, self.key_mode)).cast("long"),
         )
 
     def register_sql(self, spark, name: str = "mphf_eval") -> None:
@@ -427,33 +405,8 @@ class MPHFDescriptor:
         leg halves) and the SQL wrapper casts it to BIGINT, so the
         function's result type is stable either way. After this,
         ``SELECT <name>(doc_id) FROM t`` works anywhere SQL does."""
-        import numpy as np
-        from pyspark.sql.functions import arrow_udf
-        from pyspark.sql.types import IntegerType, LongType
-
-        bcast = self._broadcast_evaluator(spark)
-        narrow = self.n <= (1 << 31)
-
-        if narrow:
-
-            @arrow_udf(IntegerType())
-            def _walk(sig: pa.Array) -> pa.Array:
-                sigs = np.ascontiguousarray(
-                    sig.to_numpy(zero_copy_only=False), dtype=np.int64
-                )
-                out = bcast.value.evaluate(sigs)
-                return pa.array(out.astype(np.int32), type=pa.int32())
-
-        else:
-
-            @arrow_udf(LongType())
-            def _walk(sig: pa.Array) -> pa.Array:
-                sigs = np.ascontiguousarray(
-                    sig.to_numpy(zero_copy_only=False), dtype=np.int64
-                )
-                return pa.array(bcast.value.evaluate(sigs), type=pa.int64())
-
-        spark.udf.register(f"_{name}_walk", _walk)
+        walk = _walk_udf(self._broadcast_evaluator(spark), self.n <= (1 << 31))
+        spark.udf.register(f"_{name}_walk", walk)
         cast = "BIGINT" if self.key_mode == 1 else "STRING"
         arg = "CAST(k AS BIGINT)" if self.key_mode == 1 else "CAST(k AS STRING)"
         # xxhash64 hashes the salt as an input COLUMN, so its SQL type is
@@ -469,6 +422,27 @@ class MPHFDescriptor:
             f" RETURNS BIGINT RETURN "
             f"CAST(_{name}_walk(xxhash64({arg}, {salt_lit})) AS BIGINT)"
         )
+
+
+def _walk_udf(bcast, narrow: bool):
+    """Arrow UDF mapping int64 signatures to MPHF indices through the
+    broadcast decoded evaluator. ``narrow`` (n <= 2^31) returns int32,
+    halving the return leg; callers cast to long JVM-side."""
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import IntegerType, LongType
+
+    if narrow:
+        np_t, sql_t, arrow_t = np.int32, IntegerType(), pa.int32()
+    else:
+        np_t, sql_t, arrow_t = np.int64, LongType(), pa.int64()
+
+    @arrow_udf(sql_t)
+    def _walk(sig: pa.Array) -> pa.Array:
+        sigs = np.ascontiguousarray(sig.to_numpy(zero_copy_only=False), dtype=np.int64)
+        out = bcast.value.evaluate(sigs).astype(np_t, copy=False)
+        return pa.array(out, type=arrow_t)
+
+    return _walk
 
 
 _BLOCK_SCHEMA = (
@@ -580,8 +554,9 @@ class RecSplitBuilder:
     """Distributed MPHF construction (reference: ``RecSplitBuilder``).
 
     Parameters mirror the reference: ``leaf_size`` (1..20 practical),
-    ``avg_bucket_size`` (4..4096). ``partitions`` bounds kernel parallelism
-    (default: 2x the cluster's default parallelism). ``checkpoint_dir``
+    ``avg_bucket_size`` (4..4096). ``partitions`` sets the kernel task count
+    (default: one task per core, at most one per ~32k keys and one per
+    bucket; see ``_build_once``). ``checkpoint_dir``
     enables resumable builds: per-partition results (bucket-range blocks)
     are persisted as parquet with lineage and reused on re-run.
     """
@@ -658,17 +633,11 @@ class RecSplitBuilder:
         )
 
     # -- internals ------------------------------------------------------------
-    def _bucket_log2(self, n: int) -> int:
-        import math
-
-        target = max(1, round(n / self.avg_bucket_size))
-        return max(0, math.ceil(math.log2(target)))
-
     def _build_once(self, keys, n: int, salt: int, key_mode: int) -> MPHFDescriptor:
         from pyspark.sql import functions as F
 
         spark = keys.sparkSession
-        blog2 = self._bucket_log2(n)
+        blog2 = bucket_log2_for(n, self.avg_bucket_size)
         bc = 1 << blog2
         # one kernel task per core: consecutive Python tasks on a reused
         # worker pay a ~0.25-0.4 s Spark handoff, once per extra task wave.

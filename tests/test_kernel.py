@@ -516,3 +516,139 @@ def test_split_thresholds_match_positions(st8):
         pos = positions_inplace(x.copy(), s)
         for b, t in checks:
             assert ((u < t) == (pos < b)).all(), (s, b)
+
+
+def _evaluator_fixture(leaf, avg, gen, n, seed):
+    """(descriptor round-tripped through its bytes, member sigs)."""
+    from recsplit_spark.mphf import MPHFDescriptor, build_descriptor_from_sigs
+
+    rng = np.random.default_rng(seed)
+    sigs = np.unique(rng.integers(-(2**63), 2**63, n, dtype=np.int64))
+    rng.shuffle(sigs)
+    desc = build_descriptor_from_sigs(sigs, leaf, avg, settings=get_settings(leaf, gen))
+    return MPHFDescriptor.from_bytes(desc.to_bytes()), sigs
+
+
+@pytest.fixture(scope="module")
+def evaluator_fixtures():
+    """leaf/avg/gen/n descriptors covering leaf 1-16, avg bucket 4-2048,
+    rule generations 1 and 2 and a single bucket, plus F1's skew fixture
+    with oversized buckets and (at avg 16) seven empty buckets in eight."""
+    from recsplit_spark.mphf import MPHFDescriptor, build_descriptor_from_sigs
+
+    fx = {
+        f"{leaf}/{avg}/{gen}/{n}": _evaluator_fixture(leaf, avg, gen, n, 1000 + leaf + avg)
+        for leaf, avg, gen, n in (
+            (1, 4, 1, 1 << 11),
+            (4, 37, 1, 1 << 13),
+            (8, 128, 1, 1 << 14),
+            (8, 2048, 1, 1 << 13),
+            (8, 2048, 1, 1500),  # one bucket: bucket_log2 == 0
+            (12, 256, 1, 1 << 13),
+            (12, 512, 2, 1 << 13),
+            (16, 64, 1, 1 << 12),
+        )
+    }
+    skew = _f1_skew_sigs()
+    for avg in (128, 16):  # 16: seven of every eight buckets are empty
+        desc = build_descriptor_from_sigs(skew, 8, avg)
+        fx[f"skew/{avg}"] = (MPHFDescriptor.from_bytes(desc.to_bytes()), skew)
+    return fx
+
+
+def _evaluator_digests(desc, sigs):
+    """sha256 of the decoded codes table (with its dtype) and of the
+    indices of every member plus 2^16 seeded non-member probes."""
+    import hashlib
+
+    probes = np.random.default_rng(77).integers(-(2**63), 2**63, 1 << 16, dtype=np.int64)
+    out = desc.evaluate_array(np.concatenate([sigs, probes])).astype("<i8")
+    codes = desc._evaluator().codes
+    return (
+        codes.dtype.str + ":" + hashlib.sha256(codes.tobytes()).hexdigest(),
+        hashlib.sha256(out.tobytes()).hexdigest(),
+    )
+
+
+#: (codes dtype:sha256, sha256 of the indices) per fixture, recorded with
+#: the size-grouped evaluator this one replaced
+_EVAL_GOLDEN = {
+    '1/4/1/2048': ('<u2:7711a53ce7c4aefc4f0c48356256a5a0d302f10ef4347fdfa88e41f772866ea6', '3823c0b2afe4a0ebbc9c956eb76093c847a9832eadf79d8c331d3ed2ff118c9c'),
+    '4/37/1/8192': ('<u2:2f3685e98b313b71ca0d164decd3b2d29bccf408a5c8c746ff25d45c5fadd627', '1b19735420139f4c4a0c7d8289fbb26a6429e00fc417f0c4f2f6f2aeb9a3ceb7'),
+    '8/128/1/16384': ('<u2:0f5c3aca141bdcfbdc6eb968b51ff6996bb7065668ebfaf967d3b0a16d418a64', 'e66d044b70e4260743b7b3697b424ebee0ded33571b72c18c1304580d1f82f21'),
+    '8/2048/1/8192': ('<u2:13a3a1bfaed87a0be71b671a192bf4956f4c62fdf1a4d925a288d73b3c202451', '75e780931ec612d28633ded8b0a42fedd357a6acd0719c7cdd10b6b4d6f2e29a'),
+    '8/2048/1/1500': ('<u2:ce410cd122edf8e533213f814ce4cdb8300c7b665eeb75c01eb5390f3885c900', 'e554e15ebe425c2c3e05dd3eed8cdde11220acb906fe2d3dc83eb62b8968d80f'),
+    '12/256/1/8192': ('<u2:c8815805040c8649bdc238b5d3724ee3349171160513a1749ebe3d39b29b0525', '27da5dcfb0a4f87b4e405de4d04993dffea46cf4baa2db7b68fef0e8cf4e97a5'),
+    '12/512/2/8192': ('<u2:701b00c6a0582467125f8a688f33679aa1176fc71ed5a71dda8592a7ae8d315b', 'd63ec87883747e2e460f45a5c0fcb2262cb5662949bad6911fe8194c0ad13469'),
+    '16/64/1/4096': ('<u2:3375fcd4928b8ec908674d974470b4441157ea4710f7e50d06470705e0128230', 'fc983951a6d56393cb87be9478312dba1a56272cc5f140456f5a327bd72c5701'),
+    'skew/128': ('<u2:2c20ee6fd4ae86080999944786fed0520682c3eaf1673838381ede38c6991855', 'f20a8098fb47f89cbb6119afd17f87e9a62431663c286f4889e2636c69d5b457'),
+    'skew/16': ('<u2:2c20ee6fd4ae86080999944786fed0520682c3eaf1673838381ede38c6991855', '265c82c0589f8a9a713d77672fd138e72278fd722c5851117fd6caf2572396b8'),
+}
+
+
+def test_evaluator_golden(evaluator_fixtures):
+    """The decoded codes table and the index of every member and of 2^16
+    non-member probes are pinned: the evaluator is a wire-format reader."""
+    assert set(evaluator_fixtures) == set(_EVAL_GOLDEN)
+    for name, (desc, sigs) in evaluator_fixtures.items():
+        assert _evaluator_digests(desc, sigs) == _EVAL_GOLDEN[name], name
+
+
+def test_evaluator_matches_bucket_oracle(evaluator_fixtures):
+    """Member indices equal ``kernel.eval_bucket``'s recursive DFS walk,
+    bucket by bucket, and form a permutation of [0, n)."""
+    from recsplit_spark.mphf import _bucket_of
+
+    for name, (desc, sigs) in evaluator_fixtures.items():
+        got = desc.evaluate_array(sigs)
+        assert np.array_equal(np.sort(got), np.arange(len(sigs))), name
+        bids = _bucket_of(sigs, desc.bucket_log2)
+        order = np.argsort(bids, kind="stable")
+        cuts = np.searchsorted(bids[order], np.arange(len(desc.offsets)))
+        for b in np.flatnonzero(np.diff(cuts)):
+            rows = order[cuts[b] : cuts[b + 1]]
+            bits = unpack_bits(desc.stream[desc.byte_starts[b] : desc.byte_starts[b + 1]])
+            size = int(desc.offsets[b + 1] - desc.offsets[b])
+            want = eval_bucket(bits, size, sigs[rows], int(desc.offsets[b]), desc.settings)
+            assert np.array_equal(got[rows], want), (name, b)
+
+
+def test_split_rules_are_equal_parts_plus_last():
+    """The evaluator's child formula ``min(pos // d, m - 1)`` needs every
+    split to be m-1 equal parts + a last part. Sweeps every rule table the
+    descriptor can name (leaf 1-20 x generations 0-3, sizes <= 1024), and
+    a hand-made irregular rule must make table construction raise."""
+    import multiprocessing
+    import os
+    from concurrent.futures import ProcessPoolExecutor
+
+    from recsplit_spark.evaluate import VectorEvaluator, _size_tables
+    from recsplit_spark.settings import LARGE_LEAF
+
+    configs = []
+    for leaf in range(1, 21):
+        gens = [Settings(leaf, initial_max=1, rule_gen=g) for g in range(4)]
+        if leaf < LARGE_LEAF:  # the generation does not enter the DP here
+            assert len({(g.time_weight, g.max_expected_trials) for g in gens}) == 1
+            gens = gens[:1]
+        configs += [(leaf, g.rule_gen) for g in gens]
+    # ~1 s of DP per table: four spawned workers keep the sweep short
+    with ProcessPoolExecutor(
+        min(4, os.cpu_count() or 1), mp_context=multiprocessing.get_context("spawn")
+    ) as ex:
+        leaves, rule_gens = zip(*configs)
+        tables = list(ex.map(Settings, leaves, [1024] * len(configs), rule_gens))
+    for (leaf, gen), st in zip(configs, tables):
+        assert (st.leaf_size, st.rule_gen) == (leaf, gen)
+        for s, p in enumerate(st.parts[:1025]):
+            assert not p or len(set(p[:-1])) == 1, (leaf, gen, s, p)
+        _size_tables(st, 1024)
+
+    st = Settings(8, initial_max=64)
+    offsets, starts = np.array([0, 48]), np.zeros(2, np.int64)
+    for bad in ((16, 12, 12), (10, 14, 16)):
+        st.parts[40] = bad
+        with pytest.raises(ValueError, match="m-1 equal parts"):
+            VectorEvaluator(st, 0, offsets, starts, b"")
+    st.parts[40] = (12, 12, 16)  # m-1 equal parts + a larger last part
+    _size_tables(st, 64)
