@@ -11,6 +11,12 @@ hitters) with resumable checkpointed builds.
 
 __version__ = "0.1.0"
 
+# every PySpark worker that unpickles a library UDF runs this module: keep
+# it stdlib-only at import
+from .session import install_worker_zip_cache as _install_worker_zip_cache
+
+_install_worker_zip_cache()
+
 def __getattr__(name):  # lazy: keep numpy-only modules importable without pyspark
     if name in ("MPHFDescriptor", "RecSplitBuilder", "build_descriptor_from_sigs"):
         from . import mphf

@@ -498,7 +498,7 @@ class IncrementalMPHF:
     @staticmethod
     def _coalesced(df, coalesce):
         """The eval-side partition discipline of ``MPHFDescriptor.evaluate``
-        (per-task Arrow transport dominates; ~1.5 tasks/core wins):
+        (a fixed cost per Python task dominates; ~1.5 tasks/core wins):
         ``'auto'`` → ``max(2, 3 * defaultParallelism // 2)``; an int is
         used as-is; ``None`` leaves partitioning alone. Narrow — never an
         Exchange — and never increases the partition count."""
@@ -518,7 +518,7 @@ class IncrementalMPHF:
         — within its generation the MPHF is a bijection by construction.
         Rows with a NULL, negative, or out-of-range generation get NULL.
         ``coalesce``: see ``MPHFDescriptor.evaluate`` (``'auto'`` = ~1.5
-        tasks/core, the measured per-task-transport sweet spot)."""
+        tasks/core, the measured sweet spot for the per-task cost)."""
         from pyspark.sql import functions as F
 
         spark = df.sparkSession

@@ -368,10 +368,15 @@ class MPHFDescriptor:
         ``coalesce``: partition-count discipline for the Arrow stage. The
         walk itself is no longer the limiter (~140 ns/key on one core at
         leaf 8 / avg bucket 128, ``evaluate.VectorEvaluator``);
-        the residual end-to-end cost is PER-TASK Arrow transport overhead,
+        the residual end-to-end cost is a fixed cost per Python task,
         so many small partitions lose to few large ones (round-3
         controls: 16M keys at 48 partitions beat 128 by 1.6x on 32
-        cores). ``'auto'`` coalesces to ~1.5 tasks per core
+        cores). Most of that cost was not Arrow transport but PySpark's
+        per-task ``importlib.invalidate_caches()`` re-reading every zip
+        on the worker's path, 0.14-0.42 s per task on 4 cores, now under
+        1 ms (``session.install_worker_zip_cache``); the ~1.5 tasks/core
+        default predates that fix and stays until it is re-measured.
+        ``'auto'`` coalesces to ~1.5 tasks per core
         (``max(2, 3 * defaultParallelism // 2)``), an int coalesces to
         that count, ``None`` (default) leaves partitioning alone.
         ``coalesce`` is a NARROW dependency — no shuffle is introduced —
@@ -639,12 +644,22 @@ class RecSplitBuilder:
         spark = keys.sparkSession
         blog2 = bucket_log2_for(n, self.avg_bucket_size)
         bc = 1 << blog2
-        # one kernel task per core: consecutive Python tasks on a reused
-        # worker pay a ~0.25-0.4 s Spark handoff, once per extra task wave.
-        # Build wall on 4 cores (median of 3) at 4 / 8 / 16 kernel tasks:
-        # 2^18 keys 1.21 / 1.68 / 2.52 s; 2^21 keys 4.14 / 4.74 / 5.48 s.
+        # one kernel task per core. Each Python task used to pay 0.14-0.42 s
+        # of CPU before the UDF ran: PySpark's per-task
+        # importlib.invalidate_caches() re-parsed every zip on the worker's
+        # path, until session.install_worker_zip_cache. Build wall on 4
+        # cores at 4 / 8 / 16 kernel tasks, range of three medians of 3,
+        # without -> with that fix:
+        #   2^18 keys 1.15-1.36 / 1.29-1.61 / 1.63-2.29 s
+        #          -> 0.66-1.22 / 0.85-1.07 / 0.82-1.24 s
+        #   2^21 keys 3.23-4.43 / 3.09-4.71 / 3.96-5.93 s
+        #          -> 2.98-4.38 / 3.32-4.82 / 3.42-3.59 s (the third
+        #             16-task run read 11.0 s; re-timed, 4.65-4.86 s)
+        # so extra waves now cost less than the host's run-to-run spread;
+        # the one-wave default stays until a measured change moves it.
         # Floored at ~32k keys per task: below that the per-task fixed cost
-        # IS the build (457k keys at 64 partitions: 1.9 s vs 1.1 s at 8).
+        # IS the build (457k keys at 64 partitions: 1.9 s vs 1.1 s at 8,
+        # measured before the fix).
         nparts = self.partitions or min(
             spark.sparkContext.defaultParallelism, max(1, n // 32768)
         )

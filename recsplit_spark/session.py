@@ -1,10 +1,68 @@
-"""SparkSession factory with the engine's recommended configuration."""
+"""SparkSession factory with the engine's recommended configuration, and
+the per-process import fix the package installs in PySpark workers."""
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
+
+#: (st_ino, st_size, st_mtime_ns) and directory of each archive last read
+#: by the stat-checked ``zipimporter.invalidate_caches``; process-wide like
+#: ``zipimport._zip_directory_cache``, which it mirrors
+_zip_stamps: dict = {}
+_stock_zip_invalidate = None
+
+
+def _stat_checked_invalidate_caches(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's central
+    directory only when the file's (inode, size, mtime) changed since the
+    last read; a changed, replaced or missing archive gets the stock
+    re-read, so imports resolve exactly as with the stock method."""
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_ino, st.st_size, st.st_mtime_ns)
+    except OSError:
+        stamp = None
+    seen = _zip_stamps.get(self.archive)
+    if stamp is not None and seen is not None and seen[0] == stamp:
+        self._files = seen[1]
+        return
+    # stat BEFORE the read: a write racing the read leaves a stale stamp,
+    # which forces one more re-read, never a stale directory
+    _stock_zip_invalidate(self)
+    if stamp is not None and self.archive in zipimport._zip_directory_cache:
+        _zip_stamps[self.archive] = (stamp, self._files)
+    else:
+        _zip_stamps.pop(self.archive, None)
+
+
+def install_worker_zip_cache() -> None:
+    """Stop each PySpark worker task from re-parsing every zip on sys.path.
+
+    ``pyspark.worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` at the start of every task. Before
+    CPython 3.13 that makes every ``zipimporter`` in
+    ``sys.path_importer_cache`` re-read its archive's central directory in
+    pure Python: up to 12 importers over the 3.5 MB ``pyspark.zip`` (one
+    per pyspark package the worker imported) at ~12 ms each and 2 over the
+    spark-core jar at ~50 ms each, 0.14-0.42 s of CPU per task on a 4-core
+    host (0.14 ms median with this installed; the first call per archive
+    in a process still reads it). Installed once per worker process from
+    the package import; a no-op on the driver (``pyspark.worker`` not
+    loaded) and on CPython >= 3.13, whose ``invalidate_caches`` is
+    already lazy.
+    """
+    global _stock_zip_invalidate
+    if sys.version_info >= (3, 13) or "pyspark.worker" not in sys.modules:
+        return
+    stock = getattr(zipimport.zipimporter, "invalidate_caches", None)
+    if stock is None or stock is _stat_checked_invalidate_caches:
+        return
+    _stock_zip_invalidate = stock
+    zipimport.zipimporter.invalidate_caches = _stat_checked_invalidate_caches
 
 
 def ship_package(spark) -> None:
