@@ -86,36 +86,25 @@ def _touched_frames(spark):
         ("mphf_eval", desc2.evaluate(keys_ck, "pk", coalesce="auto"))
     )
     # the build is an action chain; its plan-bearing frame is the kernel
-    # input (exchange + MapInPandas). Reconstruct the exchange exactly as
-    # THIS TREE's builder does it (detected from its source), so before/
-    # after captures reflect the real shapes.
-    import inspect
+    # frame (exchange + MapInPandas), taken from the builder's own helper
+    from recsplit_spark.mphf import (
+        _kernel_blocks,
+        _make_kernel,
+        bucket_log2_for,
+        key_mode_for,
+    )
 
     builder = RecSplitBuilder(leaf_size=8, avg_bucket_size=128)
-    from recsplit_spark.mphf import bucket_log2_for, key_mode_for
-
-    km = key_mode_for(keys, "pk")
-    cast_t = "long" if km == 1 else "string"
+    cast_t = "long" if key_mode_for(keys, "pk") == 1 else "string"
     kdf = keys_ck.select(F.col("pk").cast(cast_t).alias("__key"))
     blog2 = bucket_log2_for(n_keys, builder.avg_bucket_size)
-    sig = F.xxhash64(F.col("__key"), F.lit(0))
-    sig_df = kdf.select(sig.alias("sig"))
-    bucket_expr = F.shiftrightunsigned(F.col("sig"), 64 - blog2)
     nparts = min(
         spark.sparkContext.defaultParallelism, max(1, n_keys // 32768), 1 << blog2
     )
-    build_src = inspect.getsource(RecSplitBuilder._build_once)
-    if "sig_df.repartition(nparts, bucket_expr)" in build_src:
-        # round-6 shape: hash repartition on the bucket expression,
-        # bucket recomputed post-exchange (8 B/key shuffle)
-        parted = sig_df.repartition(nparts, bucket_expr).withColumn(
-            "bucket", bucket_expr
-        )
-    else:  # round-start shape: range partition, bucket rides the shuffle
-        parted = sig_df.withColumn("bucket", bucket_expr).repartitionByRange(
-            nparts, "bucket"
-        )
-    frames.append(("mphf_build_exchange", parted))
+    kernel = _make_kernel(builder.leaf_size, builder.avg_bucket_size)
+    frames.append(
+        ("mphf_build_blocks", _kernel_blocks(kdf, 0, blog2, nparts, kernel))
+    )
 
     from recsplit_spark.data import sequences
     from recsplit_spark.pipeline.substring_dedup import duplicate_spans

@@ -11,7 +11,7 @@ store the 2-bit g-value for EVERY vertex with sentinel 3 = "unassigned"
 ``BDZ.java:49-73``). Per-vertex storage is 2·γ ≈ 2.46 bits/key — smaller
 than the reference's 3.66 — and the assigned-vertex bitmap needed for the
 final rank is implied by ``g != 3``; the rank inventory is rebuilt at load
-(one cumsum), exactly like our Elias-Fano select tables.
+(one cumsum).
 
 The scalar peel queue (``BDZ.java:110-140``) is re-architected as
 **round-synchronous vectorized peeling**: each round strips every

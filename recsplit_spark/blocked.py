@@ -78,6 +78,17 @@ def parse_descriptor(blob: bytes):
         return BDZDescriptor.from_bytes(blob)
     return MPHFDescriptor.from_bytes(blob)
 
+
+def _block_descs(blocks_pdf: pd.DataFrame) -> dict:
+    """``{block: (descriptor, attempt)}`` for one cogroup's block rows."""
+    return {
+        int(b): (parse_descriptor(bytes(blob)), int(att))
+        for b, att, blob in zip(
+            blocks_pdf["__block"], blocks_pdf["attempt"], blocks_pdf["blob"]
+        )
+    }
+
+
 _BLOCK_SCHEMA = (
     "block long, n_keys long, nbytes long, part_id int, build_ns long,"
     " attempt int, blob binary"
@@ -160,31 +171,42 @@ class BlockedMPHF:
         )
 
     # -- evaluation -------------------------------------------------------------
-    def evaluate(self, df, key_col: str, out_col: str = "mphf_index"):
-        """Append the global MPHF index; fully distributed (cogroup on block).
-
-        Output columns = input columns + ``out_col``. Results for keys not in
-        the build set are unspecified (standard MPHF contract).
-        """
+    def _cogroup_inputs(self, df, key_col: str, carry: bool):
+        """The two sides of the per-block cogroup shared by ``evaluate``
+        and ``verify_bijection``: ``df`` keyed by ``__sig``, ``__sig2`` and
+        ``__block`` (after df's own columns when ``carry``, else alone),
+        and the block table as ``(__block, attempt, blob)`` — attempt 0
+        for checkpoints written before per-block attempts existed."""
         from pyspark.sql import functions as F
 
-        spark = df.sparkSession
-        offsets_b = spark.sparkContext.broadcast(self.block_offsets)
         salt, blog2 = self.salt, self.block_log2
-
-        keyed = df.withColumn(
-            "__sig", key_sig_expr(key_col, salt, self.key_mode)
-        ).withColumn("__sig2", key_sig_expr(key_col, salt ^ SALT2_MIX, self.key_mode))
+        keyed = df.select(
+            *(["*"] if carry else []),
+            key_sig_expr(key_col, salt, self.key_mode).alias("__sig"),
+            key_sig_expr(key_col, salt ^ SALT2_MIX, self.key_mode).alias("__sig2"),
+        )
         if blog2 == 0:
             keyed = keyed.withColumn("__block", F.lit(0).cast("long"))
         else:
             keyed = keyed.withColumn(
                 "__block", F.shiftrightunsigned(F.col("__sig"), 64 - blog2)
             )
-        blocks_raw = spark.read.parquet(self.blocks_path)
-        if "attempt" not in blocks_raw.columns:  # pre-attempt checkpoints
-            blocks_raw = blocks_raw.withColumn("attempt", F.lit(0))
-        blocks = blocks_raw.select("block", "attempt", "blob")
+        blocks = df.sparkSession.read.parquet(self.blocks_path)
+        if "attempt" not in blocks.columns:  # pre-attempt checkpoints
+            blocks = blocks.withColumn("attempt", F.lit(0))
+        return keyed, blocks.select(
+            F.col("block").alias("__block"), "attempt", "blob"
+        )
+
+    def evaluate(self, df, key_col: str, out_col: str = "mphf_index"):
+        """Append the global MPHF index; fully distributed (cogroup on block).
+
+        Output columns = input columns + ``out_col``. Results for keys not in
+        the build set are unspecified (standard MPHF contract).
+        """
+        spark = df.sparkSession
+        offsets_b = spark.sparkContext.broadcast(self.block_offsets)
+        keyed, blocks = self._cogroup_inputs(df, key_col, carry=True)
 
         out_fields = [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
         out_schema = ", ".join(out_fields + [f"{out_col} long"])
@@ -200,12 +222,7 @@ class BlockedMPHF:
             sig0 = keys_pdf["__sig"].to_numpy()
             sig2 = keys_pdf["__sig2"].to_numpy()
             blk = keys_pdf["__block"].to_numpy()
-            descs = {
-                int(b): (parse_descriptor(bytes(blob)), int(att))
-                for b, att, blob in zip(
-                    blocks_pdf["__block"], blocks_pdf["attempt"], blocks_pdf["blob"]
-                )
-            }
+            descs = _block_descs(blocks_pdf)
             order = np.argsort(blk, kind="stable")
             bounds = np.flatnonzero(np.diff(blk[order])) + 1
             for rows in np.split(order, bounds):
@@ -225,7 +242,7 @@ class BlockedMPHF:
 
         return (
             keyed.groupBy("__block")
-            .cogroup(blocks.withColumnRenamed("block", "__block").groupBy("__block"))
+            .cogroup(blocks.groupBy("__block"))
             .applyInPandas(_eval, schema=out_schema)
         )
 
@@ -250,24 +267,7 @@ class BlockedMPHF:
 
         spark = df.sparkSession
         offsets_b = spark.sparkContext.broadcast(self.block_offsets)
-        salt, blog2 = self.salt, self.block_log2
-
-        keyed = df.select(
-            key_sig_expr(key_col, salt, self.key_mode).alias("__sig"),
-            key_sig_expr(key_col, salt ^ SALT2_MIX, self.key_mode).alias(
-                "__sig2"
-            ),
-        )
-        if blog2 == 0:
-            keyed = keyed.withColumn("__block", F.lit(0).cast("long"))
-        else:
-            keyed = keyed.withColumn(
-                "__block", F.shiftrightunsigned(F.col("__sig"), 64 - blog2)
-            )
-        blocks_raw = spark.read.parquet(self.blocks_path)
-        if "attempt" not in blocks_raw.columns:
-            blocks_raw = blocks_raw.withColumn("attempt", F.lit(0))
-        blocks = blocks_raw.select("block", "attempt", "blob")
+        keyed, blocks = self._cogroup_inputs(df, key_col, carry=False)
 
         def _check(keys_pdf: pd.DataFrame, blocks_pdf: pd.DataFrame) -> pd.DataFrame:
             if len(keys_pdf) == 0 and len(blocks_pdf) == 0:
@@ -277,12 +277,7 @@ class BlockedMPHF:
                      "ok": pd.Series(dtype="bool")}
                 )
             offs = offsets_b.value
-            descs = {
-                int(b): (parse_descriptor(bytes(blob)), int(att))
-                for b, att, blob in zip(
-                    blocks_pdf["__block"], blocks_pdf["attempt"], blocks_pdf["blob"]
-                )
-            }
+            descs = _block_descs(blocks_pdf)
             rows = []
             if len(keys_pdf):
                 sig0 = keys_pdf["__sig"].to_numpy()
@@ -314,7 +309,7 @@ class BlockedMPHF:
 
         per_block = (
             keyed.groupBy("__block")
-            .cogroup(blocks.withColumnRenamed("block", "__block").groupBy("__block"))
+            .cogroup(blocks.groupBy("__block"))
             .applyInPandas(_check, schema="block long, n_keys long, ok boolean")
         )
         # persist the (one-row-per-block) result so a failed verify's

@@ -1,13 +1,13 @@
-"""Bit-level codecs in numpy: bit packing, Golomb-Rice, Elias-Fano.
+"""Bit-level codecs in numpy: bit packing, Golomb-Rice, split-Rice arrays.
 
 Reference semantics (not byte-compatible — self-consistent formats):
   * bit order: MSB-first within the stream, like ``BitBuffer.java:122-131``;
   * Golomb-Rice: ``q`` one-bits, a zero, then ``k`` remainder bits
     (``BitBuffer.writeGolombRice``, ``BitBuffer.java:161-191``);
-  * Elias-Fano monotone list (``monotoneList/EliasFanoMonotoneList.java``):
-    low ``l`` bits fixed-width + high bits in unary. Decoding here expands
-    the whole list to a numpy array once (the evaluator caches it), so no
-    select structure is required (SURVEY §2.4 M6 note).
+  * split-Rice arrays (``rice_split_*``) carry the descriptor's header
+    metadata lists as zigzag-folded deltas; they replaced the Elias-Fano
+    and multi-stage monotone lists (``monotoneList/``) in descriptor v3,
+    which decodes each list once, so no random-access codec remains.
 
 Everything is vectorized; per-value Python loops appear only in the tiny
 header paths.
@@ -212,201 +212,9 @@ def rice_split_decode(data: bytes | memoryview) -> np.ndarray:
     return q
 
 
-# ---------------------------------------------------------------------------
-# Elias-Fano monotone list
-# ---------------------------------------------------------------------------
-
-_EF_HDR = struct.Struct("<QQB")  # n, universe, l
-
-
-def ef_encode(arr: np.ndarray, universe: int | None = None) -> bytes:
-    """Encode a non-decreasing uint64 array. Self-describing."""
-    arr = np.asarray(arr, dtype=np.uint64)
-    n = len(arr)
-    if universe is None:
-        universe = int(arr[-1]) + 1 if n else 1
-    if n == 0:
-        return _EF_HDR.pack(0, universe, 0)
-    l = max(0, int(np.floor(np.log2(max(1.0, universe / n)))))
-    low_bytes = b""
-    if l:
-        lows = arr & np.uint64((1 << l) - 1)
-        low_bytes, _ = pack_bits(lows, np.full(n, l, dtype=np.int64))
-    highs = (arr >> np.uint64(l)).astype(np.int64)
-    hi_len = n + int(highs[-1]) + 1
-    hi_bits = np.zeros(hi_len, dtype=np.uint8)
-    hi_bits[highs + np.arange(n, dtype=np.int64)] = 1
-    hi_bytes = np.packbits(hi_bits).tobytes()
-    return (
-        _EF_HDR.pack(n, universe, l)
-        + struct.pack("<II", len(low_bytes), len(hi_bytes))
-        + low_bytes
-        + hi_bytes
-    )
-
-
-def ef_decode(data: bytes | memoryview) -> np.ndarray:
-    """Decode the full list to a uint64 array (vectorized)."""
-    n, universe, l = _EF_HDR.unpack_from(data, 0)
-    if n == 0:
-        return np.empty(0, dtype=np.uint64)
-    off = _EF_HDR.size
-    low_len, hi_len = struct.unpack_from("<II", data, off)
-    off += 8
-    if l:
-        low_bits = unpack_bits(bytes(data[off : off + low_len]))
-        lows = _gather_fixed(low_bits, n, l)
-    else:
-        lows = np.zeros(n, dtype=np.uint64)
-    off += low_len
-    hi_bits = unpack_bits(bytes(data[off : off + hi_len]))
-    ones = np.flatnonzero(hi_bits == 1)[:n]
-    highs = (ones - np.arange(n, dtype=np.int64)).astype(np.uint64)
-    return (highs << np.uint64(l)) | lows
-
-
 def _gather_fixed(bits: np.ndarray, n: int, width: int) -> np.ndarray:
     """Read ``n`` fixed-``width`` MSB-first values from a 0/1 array."""
     idx = np.arange(n, dtype=np.int64)[:, None] * width + np.arange(width, dtype=np.int64)[None, :]
     chunk = bits[idx].astype(np.uint64)
     shifts = np.arange(width - 1, -1, -1, dtype=np.uint64)
     return (chunk << shifts).sum(axis=1, dtype=np.uint64)
-
-
-def ef_size_bits(n: int, universe: int) -> float:
-    """Analytical size (bits) — used by space tests."""
-    if n == 0:
-        return _EF_HDR.size * 8
-    l = max(0, int(np.floor(np.log2(max(1.0, universe / n)))))
-    return n * l + n + (universe >> l) + 1
-
-
-# ---------------------------------------------------------------------------
-# multi-stage monotone list (linear-interpolation baseline + residual levels)
-# ---------------------------------------------------------------------------
-#
-# SURVEY §2.4 M5 (`monotoneList/MultiStageMonotoneList.java:10-250`): the
-# reference's second monotone codec predicts value[i] by a fixed-point
-# linear interpolation across the whole list and stores non-negative
-# residuals in three fixed-width levels (per-64-block minima, per-8-block
-# minima of what remains, per-element remainder), giving O(1) random
-# access with three loads and no select/rank structure. This is a
-# from-scratch numpy re-expression of that idea, not a byte-compatible
-# port: levels hold EXACT block minima (the reference quantizes them by
-# 32/16 to shave level-field bits at the cost of wider element
-# residuals), the header is a plain struct, and every stage is a
-# vectorized reduceat/gather. Space is data-dependent (great when the
-# list is near-linear, e.g. MPHF bucket offsets at fixed average bucket
-# size); EF stays the shipped default for the descriptor metadata — the
-# measured comparison lives in the codec tests and BASELINE.md.
-
-_MS_HDR = struct.Struct("<4sQQqBBB")
-_MS_B1, _MS_B2 = 64, 8  # level block sizes (elements per block; powers of 2)
-# gather() indexes levels by shift — derived so retuning the block sizes
-# cannot silently desync the decode from the encode
-_MS_S1, _MS_S2 = _MS_B1.bit_length() - 1, _MS_B2.bit_length() - 1
-assert (1 << _MS_S1, 1 << _MS_S2) == (_MS_B1, _MS_B2)
-
-
-def _block_min_residual(r: np.ndarray, block: int) -> np.ndarray:
-    starts = np.arange(0, len(r), block, dtype=np.int64)
-    return np.minimum.reduceat(r, starts)
-
-
-def ms_encode(arr: np.ndarray) -> bytes:
-    """Encode a non-decreasing int array (values < 2^63). Self-describing."""
-    v = np.asarray(arr, dtype=np.int64)
-    n = len(v)
-    if n == 0:
-        return _MS_HDR.pack(b"MSL1", 0, 0, 0, 0, 0, 0)
-    # range guard FIRST, in Python ints: an int64 v[-1]-v[0] (or np.diff)
-    # wraps when the range reaches 2^63, silently bypassing the guard and
-    # corrupting factor/monotonicity checks (review finding)
-    if int(v.max()) - int(v.min()) >= (1 << 31):
-        # the fixed-point interpolation (value_range << 32 in int64)
-        # caps the representable range exactly like the reference's
-        # int[] lists; larger universes belong in ef_encode
-        raise ValueError("ms_encode value range >= 2^31 — use ef_encode")
-    if (np.diff(v) < 0).any():  # overflow-safe now: range < 2^31
-        raise ValueError("ms_encode input must be non-decreasing")
-    diff = int(v[-1] - v[0])
-    factor = ((diff << 32) // n) + 1
-    pred = (np.arange(n, dtype=np.int64) * factor) >> 32
-    add = int((v - pred).min())
-    r = v - pred - add  # >= 0 by choice of add
-    g1 = _block_min_residual(r, _MS_B1)
-    r1 = r - np.repeat(g1, _MS_B1)[:n]
-    g2 = _block_min_residual(r1, _MS_B2)
-    r2 = r1 - np.repeat(g2, _MS_B2)[:n]
-    out = [b""]
-    widths = []
-    for level in (g1, g2, r2):
-        w = int(level.max()).bit_length() if len(level) else 0
-        widths.append(w)
-        packed, _ = pack_bits(level, np.full(len(level), max(w, 1), np.int64)) \
-            if w else (b"", 0)
-        out.append(struct.pack("<I", len(packed)) + packed)
-    out[0] = _MS_HDR.pack(b"MSL1", n, factor, add, *widths)
-    return b"".join(out)
-
-
-class _MSList:
-    """Decoded multi-stage list: O(1)/vectorized random access."""
-
-    __slots__ = ("n", "factor", "add", "g1", "g2", "r2")
-
-    def __init__(self, n, factor, add, g1, g2, r2):
-        self.n, self.factor, self.add = n, factor, add
-        self.g1, self.g2, self.r2 = g1, g2, r2
-
-    def gather(self, idx: np.ndarray) -> np.ndarray:
-        idx = np.asarray(idx, dtype=np.int64)
-        if len(idx) and (idx.min() < 0 or idx.max() >= self.n):
-            raise IndexError("index out of range")
-        pred = (idx * self.factor) >> 32
-        return (
-            pred
-            + self.add
-            + self.g1[idx >> _MS_S1]
-            + self.g2[idx >> _MS_S2]
-            + self.r2[idx]
-        )
-
-    def get(self, i: int) -> int:
-        return int(self.gather(np.array([i]))[0])
-
-    def to_array(self) -> np.ndarray:
-        return self.gather(np.arange(self.n, dtype=np.int64))
-
-
-def ms_decode(data: bytes | memoryview) -> _MSList:
-    magic, n, factor, add, w1, w2, w3 = _MS_HDR.unpack_from(data, 0)
-    if magic != b"MSL1":
-        raise ValueError("not an MSL1 multi-stage monotone list")
-    if n == 0:
-        z = np.zeros(0, dtype=np.int64)
-        return _MSList(0, factor, add, z, z, z)
-    off = _MS_HDR.size
-    counts = (
-        (n + _MS_B1 - 1) // _MS_B1,
-        (n + _MS_B2 - 1) // _MS_B2,
-        n,
-    )
-    levels = []
-    for cnt, w in zip(counts, (w1, w2, w3)):
-        (blen,) = struct.unpack_from("<I", data, off)
-        off += 4
-        if w == 0 or n == 0:
-            levels.append(np.zeros(cnt, dtype=np.int64))
-        else:
-            bits = unpack_bits(bytes(data[off : off + blen]))
-            levels.append(
-                _gather_fixed(bits, cnt, max(w, 1)).astype(np.int64)
-            )
-        off += blen
-    return _MSList(n, factor, add, *levels)
-
-
-def ms_size_bits(arr: np.ndarray) -> int:
-    """Serialized size in bits (header included) — for space comparisons."""
-    return len(ms_encode(arr)) * 8

@@ -15,16 +15,15 @@ Architecture (SURVEY §3.1 "Spark re-architecture"):
    salted hash family per the north rule).
 2. **Shuffle** on bucket id replaces the reference's in-place counting-sort
    scatter (``FastGenerator.sortIntoBuckets``, ``FastGenerator.java:56-114``)
-   — each bucket lands wholly inside one partition. Plain builds HASH-
-   partition on the bucket id (no range-boundary sampling pass; the merge
-   scatters per bucket, so range contiguity is unnecessary); checkpointed
-   builds use ``repartitionByRange`` because resume membership is interval
-   arithmetic over contiguous bucket ranges.
+   — each bucket lands wholly inside one partition. Every build HASH-
+   partitions on the bucket id (no range-boundary sampling pass; the merge
+   scatters per bucket, so range contiguity is unnecessary); a checkpoint
+   resume drops committed buckets by their exact ids (``_kernel_blocks``).
 3. **Partition-parallel construction**: one Arrow-vectorized
    ``mapInPandas`` kernel per partition builds ALL its buckets (wavefront,
    see ``kernel.py``) and emits ONE row per partition: packed per-bucket
    streams + metadata arrays + lineage (part id, key count, wall time).
-   This row stream doubles as the **per-bucket-range checkpoint** table
+   This row stream doubles as the **per-partition checkpoint** table
    (reference analogue: the HEM blocked file, ``hem/HemGenerator.java:29-33``).
 4. **Associative merge**: per-bucket streams are byte-aligned and prefix
    sums are recomputed on the driver from (bucket, n_keys, byte_len), so
@@ -457,54 +456,6 @@ _BLOCK_SCHEMA = (
 )
 
 
-def _range_membership_udf(spark, ranges: list[tuple[int, int]]):
-    """Boolean Column fn: is ``bucket`` inside any committed [lo, hi] range?
-
-    The committed checkpoint is a list of disjoint bucket RANGES (one per
-    kernel partition), so resume membership is an interval lookup. The
-    round-2 version OR-chained per-range predicates — at thousands of
-    ranges the Catalyst expression tree gets deep (planner blowup) and
-    evaluation is O(ranges) per row; a broadcast nested-loop anti-join has
-    the same O(ranges)-per-row cost. Spark has no searchsorted builtin, so
-    the lookup rides a vectorized Arrow UDF over broadcast sorted bounds:
-    O(log ranges) per key, flat plan at any range count, and only the
-    bucket column crosses into Python.
-
-    Committed spans can OVERLAP: a resume's rebuild partitions span
-    contiguous ranges of the *remaining* buckets, so their [min, max] can
-    straddle already-committed holes (every bucket inside such a span is
-    covered by either the new or an earlier span — union semantics, which
-    the old OR-chain implemented implicitly). The binary search requires
-    disjoint intervals, so spans are union-merged first; skipping this
-    made a second resume misclassify buckets inside straddled spans as
-    uncovered and double-build them (caught in review)."""
-    from pyspark.sql.functions import arrow_udf
-    from pyspark.sql.types import BooleanType
-
-    los: list[int] = []
-    his: list[int] = []
-    for lo, hi in sorted(ranges):
-        if los and lo <= his[-1]:
-            his[-1] = max(his[-1], hi)
-        else:
-            los.append(lo)
-            his.append(hi)
-    bcast = spark.sparkContext.broadcast((
-        np.array(los, dtype=np.int64),
-        np.array(his, dtype=np.int64),
-    ))
-
-    @arrow_udf(BooleanType())
-    def _in_done(bucket: pa.Array) -> pa.Array:
-        los, his = bcast.value
-        b = bucket.to_numpy(zero_copy_only=False)
-        j = np.searchsorted(los, b, side="right") - 1
-        hit = (j >= 0) & (b <= his[np.maximum(j, 0)])
-        return pa.array(hit)
-
-    return _in_done
-
-
 def _space_priority_gen(space_priority: bool | str) -> int:
     """Map the builder's ``space_priority`` flag to a rule generation:
     False -> the default generation, True -> 2, "max" -> 3. Shared by
@@ -555,15 +506,52 @@ def _make_kernel(leaf_size: int, avg_bucket_size: int, rule_gen: int = RULE_GEN)
     return _kernel
 
 
+def _kernel_blocks(keys, salt: int, blog2: int, nparts: int, kernel, committed=None):
+    """The kernel frame of every RecSplit build: ``kernel`` over the
+    8-byte signatures of ``keys.__key``, one ``_BLOCK_SCHEMA`` row per
+    partition.
+
+    The shuffle HASH-partitions on the bucket id: ``_finalize`` scatters
+    per bucket, so the only invariant is whole-bucket colocation, and
+    hash partitioning needs no boundary-sampling pass (a range
+    partitioner's full extra scan computing xxhash64 over the input).
+    Bucket ids are top bits of xxhash64, so with bc >> nparts the hash
+    spreads partitions evenly. The shuffle carries ONLY the sig; the
+    bucket column is recomputed from it after the exchange.
+
+    ``committed`` (checkpointed block rows) drops the keys of every bucket
+    those rows list, with a broadcast left-anti join against
+    ``explode(bucket_ids)`` before the shuffle. Committed rows hold
+    disjoint bucket ids, so the exploded list needs no ``distinct``."""
+    from pyspark.sql import functions as F
+
+    sig_df = keys.select(F.xxhash64(F.col("__key"), F.lit(salt)).alias("sig"))
+    if blog2 == 0:
+        bucket_expr = F.lit(0).cast("long")
+    else:
+        bucket_expr = F.shiftrightunsigned(F.col("sig"), 64 - blog2)
+    if committed is not None:
+        done = committed.select(F.explode("bucket_ids").alias("bucket"))
+        sig_df = sig_df.join(
+            F.broadcast(done), bucket_expr == done["bucket"], "left_anti"
+        )
+    parted = sig_df.repartition(nparts, bucket_expr).withColumn("bucket", bucket_expr)
+    return parted.mapInPandas(kernel, schema=_BLOCK_SCHEMA)
+
+
 class RecSplitBuilder:
     """Distributed MPHF construction (reference: ``RecSplitBuilder``).
 
     Parameters mirror the reference: ``leaf_size`` (1..20 practical),
     ``avg_bucket_size`` (4..4096). ``partitions`` sets the kernel task count
     (default: one task per core, at most one per ~32k keys and one per
-    bucket; see ``_build_once``). ``checkpoint_dir``
-    enables resumable builds: per-partition results (bucket-range blocks)
-    are persisted as parquet with lineage and reused on re-run.
+    bucket; see ``_build_once``). ``checkpoint_dir`` persists the
+    per-partition block rows (each listing its exact ``bucket_ids``) as
+    parquet with lineage; a re-run rebuilds only the buckets no committed
+    row lists. Every block commits in ONE Spark job, so this saves a
+    committed build's kernel work (a re-run with part files lost or
+    removed), not a killed job's: kill-tolerant builds are
+    ``BlockedMPHFBuilder(checkpoint_waves=R)``.
     """
 
     def __init__(
@@ -639,8 +627,6 @@ class RecSplitBuilder:
 
     # -- internals ------------------------------------------------------------
     def _build_once(self, keys, n: int, salt: int, key_mode: int) -> MPHFDescriptor:
-        from pyspark.sql import functions as F
-
         spark = keys.sparkSession
         blog2 = bucket_log2_for(n, self.avg_bucket_size)
         bc = 1 << blog2
@@ -665,41 +651,11 @@ class RecSplitBuilder:
         )
         nparts = min(nparts, bc)
 
-        sig = F.xxhash64(F.col("__key"), F.lit(salt))
-        sig_df = keys.select(sig.alias("sig"))
-        if blog2 == 0:
-            bucket_expr = F.lit(0).cast("long")
-        else:
-            bucket_expr = F.shiftrightunsigned(F.col("sig"), 64 - blog2)
-
         kernel = _make_kernel(self.leaf_size, self.avg_bucket_size, self.rule_gen)
         if self.checkpoint_dir:
-            # checkpointed builds keep RANGE partitioning: resume
-            # membership is interval arithmetic over each block's
-            # [min_bucket, max_bucket], which requires partitions to be
-            # contiguous bucket ranges. Partition-local bucket order is
-            # irrelevant either way — the kernel groups by bucket itself
-            # (np.argsort on the batch).
-            sig_df = sig_df.withColumn("bucket", bucket_expr)
-            parted = sig_df.repartitionByRange(nparts, "bucket")
-            blocks_df = parted.mapInPandas(kernel, schema=_BLOCK_SCHEMA)
-            rows = self._run_with_checkpoint(spark, blocks_df, sig_df, salt, blog2)
+            rows = self._run_with_checkpoint(spark, keys, n, salt, blog2, nparts, kernel)
         else:
-            # plain builds HASH-partition on the bucket id (round 6):
-            # _finalize scatters per bucket, so the only invariant is
-            # whole-bucket colocation, not range contiguity — and hash
-            # partitioning drops repartitionByRange's boundary-sampling
-            # pass (a full extra scan computing xxhash64 over the input).
-            # Bucket ids are top bits of xxhash64, so with bc >> nparts
-            # (bc = n/avg_bucket_size, nparts <= cores) the hash
-            # spreads partitions evenly. The shuffle also carries ONLY
-            # the 8-byte sig — the bucket column is recomputed from it
-            # after the exchange (guide: shuffle fewer bytes).
-            parted = sig_df.repartition(nparts, bucket_expr).withColumn(
-                "bucket", bucket_expr
-            )
-            blocks_df = parted.mapInPandas(kernel, schema=_BLOCK_SCHEMA)
-            rows = blocks_df.collect()
+            rows = _kernel_blocks(keys, salt, blog2, nparts, kernel).collect()
         return self._finalize(rows, n, salt, blog2, key_mode)
 
     def _pin_manifest(self, spark, blog2: int) -> None:
@@ -753,35 +709,38 @@ class RecSplitBuilder:
             for st in fs.listStatus(root)
         )
 
-    def _run_with_checkpoint(self, spark, blocks_df, sig_df, salt, blog2):
-        """Resume-aware execution: completed bucket ranges are read from the
-        checkpoint parquet; only missing ranges are rebuilt (reference
-        analogue: the restartable HEM block loop, ``HemGenerator.java:48-70``).
-        """
+    def _run_with_checkpoint(self, spark, keys, n, salt, blog2, nparts, kernel):
+        """Resume-aware execution: committed blocks are read from the
+        checkpoint parquet; only the keys of buckets that no committed row
+        lists are rebuilt, through the plain build's kernel frame
+        (reference analogue: the restartable HEM block loop,
+        ``HemGenerator.java:48-70``). Membership comes from each row's
+        exact ``bucket_ids``, so blocks of any partitioning resume,
+        including range-partitioned ones written by earlier versions.
+        When the committed rows already hold all ``n`` keys no kernel job
+        runs (``_finalize`` checks the exact count). A partial resume
+        scales the task count to the share of keys left, so each task
+        gets about the keys it had in the full build: every task costs a
+        Python worker round trip and a part file: resuming an eighth of
+        2^20 keys built at partitions=1024 took 54 s in 1024 tasks and
+        17 s in the scaled 128, against 10 s for a 4-task plain build of
+        all 2^20 (4 cores)."""
         from pyspark.sql import functions as F
 
         self._pin_manifest(spark, blog2)
         path = f"{self.checkpoint_dir}/salt={salt}"
-        done_ranges: list[tuple[int, int]] = []
+        committed = None
+        done = 0
         if has_data(spark, path):
-            existing = spark.read.parquet(path)
-            done_ranges = [
-                (r["min_bucket"], r["max_bucket"])
-                for r in existing.select("min_bucket", "max_bucket").collect()
-            ]
-        if done_ranges:
-            remaining = sig_df.filter(
-                ~_range_membership_udf(spark, done_ranges)(F.col("bucket"))
-            )
-            if remaining.limit(1).count() > 0:
-                # rebuild only missing ranges, preserving the kernel chain
-                rebuilt = self._rebuild_blocks(remaining, salt)
-                rebuilt.write.mode("append").parquet(path)
-        else:
-            blocks_df.write.mode("append").parquet(path)
-        final = spark.read.parquet(path)
-        rows = final.collect()
-        # de-duplicate ranges if a retry double-wrote (first wins)
+            committed = spark.read.schema(_BLOCK_SCHEMA).parquet(path)
+            done = committed.agg(F.sum("n_keys_total")).first()[0] or 0
+        if done != n:
+            nparts = max(1, -(-nparts * max(0, n - done) // n))
+            _kernel_blocks(keys, salt, blog2, nparts, kernel, committed).write.mode(
+                "append"
+            ).parquet(path)
+        rows = spark.read.schema(_BLOCK_SCHEMA).parquet(path).collect()
+        # de-duplicate blocks if a retry double-wrote (first wins)
         seen: set[int] = set()
         uniq_rows = []
         for r in sorted(rows, key=lambda r: r["min_bucket"]):
@@ -789,14 +748,6 @@ class RecSplitBuilder:
                 seen.add(r["min_bucket"])
                 uniq_rows.append(r)
         return uniq_rows
-
-    def _rebuild_blocks(self, remaining_sig_df, salt):
-        """Re-run the kernel over the remaining (not-yet-checkpointed) keys."""
-        kernel = _make_kernel(self.leaf_size, self.avg_bucket_size, self.rule_gen)
-        nparts = max(1, remaining_sig_df.sparkSession.sparkContext.defaultParallelism)
-        return remaining_sig_df.repartitionByRange(nparts, "bucket").mapInPandas(
-            kernel, schema=_BLOCK_SCHEMA
-        )
 
     def _finalize(
         self, rows, n: int, salt: int, blog2: int, key_mode: int = 0
@@ -806,16 +757,15 @@ class RecSplitBuilder:
         into the global stream AT ITS BUCKETS' OFFSETS (M1-M3 of SURVEY
         §2.4 — order-independent by construction).
 
-        The scatter (not a sorted concatenation) matters on resume: a
-        rebuild partition spans contiguous ranges of the REMAINING
-        buckets, so one committed row's blob can hold several
-        NON-ADJACENT bucket bands laid out back-to-back — a min_bucket-
-        sorted blob join would interleave other rows' bands at the wrong
-        offsets while both the key-count and stream-length checks still
-        pass (silently non-bijective; review finding). Each row is copied
-        as runs of consecutive bucket ids — global offsets within such a
-        run are contiguous by construction — so the normal no-resume case
-        stays one memcpy per row."""
+        The scatter (not a sorted concatenation) is what makes hash
+        partitioning work: one row's blob holds the row's NON-ADJACENT
+        buckets laid out back-to-back, so a min_bucket-sorted blob join
+        would interleave other rows' buckets at the wrong offsets while
+        both the key-count and stream-length checks still pass (silently
+        non-bijective). Each row is copied as runs of consecutive bucket
+        ids — global offsets within such a run are contiguous by
+        construction — so a range-partitioned row (an earlier version's
+        checkpoint) stays one memcpy."""
         bc = 1 << blog2
         sizes = np.zeros(bc, dtype=np.int64)
         byte_lens = np.zeros(bc, dtype=np.int64)

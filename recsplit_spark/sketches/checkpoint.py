@@ -23,7 +23,7 @@ scans of the single projected input column (parquet column pruning keeps
 each scan cheap relative to losing a multi-hour job; pick waves by how
 much re-work a crash may cost, like blocked.py's checkpoint_waves).
 
-The same pattern as the MPHF side (`mphf._run_with_checkpoint`,
+The same pattern as the MPHF side (`mphf.RecSplitBuilder._run_with_checkpoint`,
 `blocked.py` waved block commits), applied to the sketch side. Reference
 analogue: minperf's chunked multi-pass processing of key sets too large
 to hold (`LargeSetTest.java` chunked 10^8 runs).

@@ -1,14 +1,11 @@
 """Codec unit tests (SURVEY §5a: exact bit patterns + round-trips,
-mirroring the reference's BitCodes/MonotoneListTest strategy)."""
+mirroring the reference's BitCodes test strategy)."""
 
 import numpy as np
-import pytest
 
 from recsplit_spark.codecs import (
     BitReader,
     PairWriter,
-    ef_decode,
-    ef_encode,
     pack_bits,
     unpack_bits,
 )
@@ -76,32 +73,6 @@ def test_unary_reader():
     assert r.read_unary() == 0
 
 
-@pytest.mark.parametrize(
-    "arr",
-    [
-        np.array([], dtype=np.uint64),
-        np.array([0], dtype=np.uint64),
-        np.array([5], dtype=np.uint64),
-        np.arange(100, dtype=np.uint64),
-        np.array([0, 0, 0, 7, 7, 1000], dtype=np.uint64),
-    ],
-)
-def test_ef_roundtrip_small(arr):
-    assert (ef_decode(ef_encode(arr)) == arr).all()
-
-
-def test_ef_roundtrip_random():
-    rng = np.random.default_rng(2)
-    for scale in (10, 1000, 10**9):
-        arr = np.sort(rng.integers(0, scale, size=500).astype(np.uint64))
-        assert (ef_decode(ef_encode(arr)) == arr).all()
-
-
-def test_ef_with_universe():
-    arr = np.array([1, 5, 9], dtype=np.uint64)
-    assert (ef_decode(ef_encode(arr, universe=100)) == arr).all()
-
-
 def test_rice_split_roundtrip():
     from recsplit_spark.codecs import rice_split_decode, rice_split_encode
 
@@ -144,80 +115,3 @@ def test_descriptor_v3_metadata_roundtrip():
     assert np.array_equal(d.byte_starts, d2.byte_starts)
     assert d.to_bytes() == d2.to_bytes()
     assert d.bits_per_key < 1.87  # v3 beats the round-1 1.876
-
-
-# ---------------------------------------------------------------------------
-# multi-stage monotone list (M5)
-# ---------------------------------------------------------------------------
-
-def test_multistage_basics():
-    import numpy as np
-    import pytest
-
-    from recsplit_spark.codecs import ms_decode, ms_encode
-
-    # empty / single / constant
-    assert ms_decode(ms_encode(np.array([], dtype=np.int64))).n == 0
-    assert ms_decode(ms_encode([7])).to_array().tolist() == [7]
-    const = np.full(100, 42, dtype=np.int64)
-    st = ms_decode(ms_encode(const))
-    assert np.array_equal(st.to_array(), const)
-    # near-linear list (the regime the codec targets): tiny residual level
-    lin = np.arange(0, 10_000, 3, dtype=np.int64)
-    blob = ms_encode(lin)
-    st = ms_decode(blob)
-    assert np.array_equal(st.to_array(), lin)
-    assert st.get(1234) == int(lin[1234])
-    # contract violations
-    with pytest.raises(ValueError, match="non-decreasing"):
-        ms_encode([3, 2, 1])
-    with pytest.raises(ValueError, match="2\\^31"):
-        ms_encode(np.array([0, 1 << 31], dtype=np.int64))
-    with pytest.raises(IndexError):
-        st.gather(np.array([len(lin)]))
-    with pytest.raises(ValueError, match="MSL1"):
-        ms_decode(b"XXXX" + bytes(32))
-
-
-def test_multistage_vs_ef_space_on_offset_lists():
-    """The codec-choice evidence behind the M5 design note, measured on
-    the near-linear lists the descriptor actually stores (bucket
-    bit-offsets at fixed average bucket size). Measured bits/element at
-    8k-1M elements: MS ~9.3, EF ~9.8, the SHIPPED v3 folded
-    second-difference split-Rice ~6.6 — so MS beats EF on real offset
-    distributions (both codecs now exist), but the shipped default
-    stays the folded-delta lists, which give up O(1) random access the
-    evaluator doesn't need (it decodes each list once) for ~30% less
-    space. This test pins all three so a regression in any is
-    visible."""
-    import numpy as np
-
-    from recsplit_spark.codecs import (
-        ef_encode,
-        ms_encode,
-        rice_split_encode,
-        zigzag,
-    )
-
-    rng = np.random.default_rng(7)
-    # synthetic bucket offsets: cumsum of per-bucket code lengths around
-    # an average of ~230 bits (leaf 8 / bucket 128 regime)
-    lens = rng.poisson(230, size=8192).astype(np.int64)
-    offsets = np.concatenate([[0], np.cumsum(lens)])
-    n = len(offsets)
-    ms_bits = len(ms_encode(offsets)) * 8
-    ef_bits = len(ef_encode(offsets.astype(np.uint64))) * 8
-    deltas = np.diff(offsets, prepend=0)
-    folded_bits = 8 * len(
-        rice_split_encode(
-            zigzag(np.diff(deltas, prepend=deltas[0]).astype(np.int64)).astype(
-                np.uint64
-            )
-        )
-    )
-    assert ms_bits < ef_bits  # MS wins the random-access codec pair
-    assert folded_bits < 0.8 * ms_bits  # shipped default still smallest
-    assert ms_bits < 0.25 * n * 64
-    # strictly-uniform lists are MS's best case: residuals collapse
-    uniform = np.arange(0, 8192 * 230, 230, dtype=np.int64)
-    assert len(ms_encode(uniform)) < len(ef_encode(uniform.astype(np.uint64)))

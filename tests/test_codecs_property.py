@@ -7,8 +7,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from recsplit_spark.codecs import (
-    ef_decode,
-    ef_encode,
     pack_bits,
     rice_split_decode,
     rice_split_encode,
@@ -60,41 +58,3 @@ def test_rice_split_roundtrip_any(values):
 def test_zigzag_roundtrip_any(values):
     arr = np.array(values, dtype=np.int64)
     assert np.array_equal(unzigzag(zigzag(arr)), arr)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(st.integers(0, 2**20), min_size=1, max_size=300),
-    st.integers(0, 2**16),
-)
-def test_ef_roundtrip_any_monotone(deltas, extra_universe):
-    arr = np.cumsum(np.array(deltas, dtype=np.uint64))
-    universe = int(arr[-1]) + 1 + extra_universe
-    assert np.array_equal(ef_decode(ef_encode(arr, universe=universe)), arr)
-
-
-@settings(max_examples=60, deadline=None)
-@given(
-    st.lists(st.integers(0, 2**16), min_size=0, max_size=400),
-    st.integers(-(2**30), 2**30),
-)
-def test_multistage_roundtrip_any_monotone(deltas, base):
-    from recsplit_spark.codecs import ms_decode, ms_encode
-
-    arr = base + np.cumsum(np.array(deltas, dtype=np.int64))
-    st_ = ms_decode(ms_encode(arr))
-    assert np.array_equal(st_.to_array(), arr)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    st.lists(st.integers(0, 2**12), min_size=1, max_size=300),
-    st.lists(st.integers(0, 10**6), min_size=1, max_size=50),
-)
-def test_multistage_random_gather(deltas, raw_idx):
-    from recsplit_spark.codecs import ms_decode, ms_encode
-
-    arr = np.cumsum(np.array(deltas, dtype=np.int64))
-    st_ = ms_decode(ms_encode(arr))
-    idx = np.array(raw_idx, dtype=np.int64) % len(arr)
-    assert np.array_equal(st_.gather(idx), arr[idx])

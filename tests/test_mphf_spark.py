@@ -248,25 +248,27 @@ def test_register_sql_function(spark, sf_dir):
 
 
 def test_checkpoint_resume_at_1024_ranges(spark, tmp_path):
-    """Resume must stay cheap when the checkpoint holds >= 1024 committed
-    bucket ranges: the round-2 OR-chain of per-range predicates built a
-    Catalyst expression tree thousands of nodes deep; the membership test
-    is now a broadcast-bounds binary search (flat plan at any range
-    count). Build with partitions=1024, drop a few ranges, resume — the
+    """Resume must stay cheap when the checkpoint holds >= 1000 committed
+    rows: the round-2 OR-chain of per-range predicates built a Catalyst
+    expression tree thousands of nodes deep; membership is now a
+    broadcast left-anti join against the rows' exploded ``bucket_ids``
+    (flat plan at any row count). Build with partitions=1024 over 8192
+    buckets — hash partitioning leaves ~37% of 1024 partitions empty when
+    there are only 1024 buckets — drop an eighth of the rows, resume: the
     result must stay byte-identical to a direct build."""
     import glob as _glob
     import os as _os
 
     import pyspark.sql.functions as F
 
-    n = 1 << 17  # bucket count 1024 at avg_bucket_size=128
+    n = 1 << 17  # bucket count 8192 at avg_bucket_size=16
     df = spark.range(0, n, 1, 32).select(F.xxhash64("id").alias("key")).cache()
     df.count()
-    direct = RecSplitBuilder(leaf_size=8, avg_bucket_size=128).build(df, "key", n=n)
+    direct = RecSplitBuilder(leaf_size=8, avg_bucket_size=16).build(df, "key", n=n)
 
     ckpt = str(tmp_path / "ckpt1024")
     b = RecSplitBuilder(
-        leaf_size=8, avg_bucket_size=128, partitions=1024, checkpoint_dir=ckpt
+        leaf_size=8, avg_bucket_size=16, partitions=1024, checkpoint_dir=ckpt
     )
     full = b.build(df, "key", n=n)
     assert full.to_bytes() == direct.to_bytes()
@@ -276,38 +278,129 @@ def test_checkpoint_resume_at_1024_ranges(spark, tmp_path):
         pq.read_table(f, columns=["min_bucket"]).num_rows
         for f in _glob.glob(f"{ckpt}/salt=0/part-*")
     )
-    assert n_ranges >= 1000, n_ranges  # repartitionByRange may fuse a boundary
+    assert n_ranges >= 1000, n_ranges  # a partition may draw no bucket
 
     part_files = sorted(_glob.glob(f"{ckpt}/salt=0/part-*"))
     for f in part_files[: max(1, len(part_files) // 8)]:
         _os.remove(f)
+    # the resume's task count does not change the bytes: the default
+    # one-task-per-core count keeps this check off 1024 tiny tasks
     resumed = RecSplitBuilder(
-        leaf_size=8, avg_bucket_size=128, partitions=1024, checkpoint_dir=ckpt
+        leaf_size=8, avg_bucket_size=16, checkpoint_dir=ckpt
     ).build(df, "key", n=n)
     assert resumed.to_bytes() == direct.to_bytes()
+    df.unpersist()
 
 
-def test_range_membership_handles_overlapping_spans(spark):
-    """Resume rebuild partitions span contiguous ranges of the REMAINING
-    buckets, so committed spans can straddle earlier holes — membership is
-    the UNION of spans (the semantics the round-2 OR-chain had). The
-    binary-search filter must union-merge overlaps or a second resume
-    double-builds buckets inside straddled spans (review finding)."""
-    import pyspark.sql.functions as F
+@pytest.fixture(scope="module")
+def resume20k(spark):
+    """20k string keys (256 buckets) and the bytes of their direct build:
+    every checkpoint resume below must reproduce them."""
+    df = sequences(spark, 20_000, partitions=4).select("doc_id").cache()
+    df.count()
+    direct = RecSplitBuilder(leaf_size=8, avg_bucket_size=128).build(df, "doc_id")
+    yield df, direct.to_bytes()
+    df.unpersist()
 
-    from recsplit_spark.mphf import _range_membership_udf
 
-    ranges = [(10, 20), (0, 30), (40, 45), (44, 50), (60, 60)]
-    udf = _range_membership_udf(spark, ranges)
-    rows = (
-        spark.range(0, 70)
-        .select(F.col("id").alias("bucket"))
-        .withColumn("hit", udf(F.col("bucket")))
-        .collect()
+def _checkpoint_build(df, ckpt, partitions=8):
+    return RecSplitBuilder(
+        leaf_size=8, avg_bucket_size=128, partitions=partitions,
+        checkpoint_dir=ckpt,
+    ).build(df, "doc_id").to_bytes()
+
+
+def _part_files(ckpt):
+    import glob as _glob
+
+    return sorted(_glob.glob(f"{ckpt}/salt=0/part-*"))
+
+
+def _committed_bucket_ids(spark, ckpt):
+    return [
+        b
+        for r in spark.read.parquet(f"{ckpt}/salt=0").collect()
+        for b in r["bucket_ids"]
+    ]
+
+
+def test_checkpoint_double_resume_byte_identical(spark, tmp_path, resume20k):
+    """Two successive resumes, each after removing different part files,
+    give the direct build's bytes. The first resume runs at another
+    partition count (3, scaled to the missing half of the keys: 2 tasks),
+    so its rows hold non-adjacent buckets of several removed rows and the second resume's committed set mixes both
+    layouts — the case where a rebuilt row's [min, max] span straddles
+    buckets committed by other rows. Every bucket is built exactly once."""
+    import os as _os
+
+    df, direct = resume20k
+    ckpt = str(tmp_path / "ckpt")
+    assert _checkpoint_build(df, ckpt) == direct
+    first = _part_files(ckpt)
+    assert len(first) == 8
+    for f in first[:4]:
+        _os.remove(f)
+    assert _checkpoint_build(df, ckpt, partitions=3) == direct
+    rebuilt = sorted(set(_part_files(ckpt)) - set(first))
+    assert len(rebuilt) == 2  # 3 tasks scaled to the missing half of the keys
+    for f in [first[4], first[6], rebuilt[1]]:
+        _os.remove(f)
+    assert _checkpoint_build(df, ckpt) == direct
+    ids = _committed_bucket_ids(spark, ckpt)
+    assert sorted(ids) == list(range(256))
+
+
+def test_checkpoint_resumes_range_partitioned_layout(spark, tmp_path, resume20k):
+    """A checkpoint in the layout earlier versions wrote — each row a
+    contiguous bucket range from ``repartitionByRange`` — resumes by its
+    rows' exact bucket ids after half its files are removed."""
+    import os as _os
+
+    from recsplit_spark.mphf import _BLOCK_SCHEMA, _make_kernel
+    from recsplit_spark.settings import RULE_GEN
+
+    df, direct = resume20k
+    blog2 = 8  # 256 buckets for 20k keys at avg_bucket_size=128
+    ckpt = str(tmp_path / "ckpt")
+    spark.createDataFrame(
+        [(8, 128, RULE_GEN, blog2)],
+        "leaf_size int, avg_bucket_size int, rule_gen int, blog2 int",
+    ).write.parquet(f"{ckpt}/_manifest")
+    sig = F.xxhash64(F.col("doc_id").cast("string"), F.lit(0))
+    df.select(sig.alias("sig")).withColumn(
+        "bucket", F.shiftrightunsigned(F.col("sig"), 64 - blog2)
+    ).repartitionByRange(8, "bucket").mapInPandas(
+        _make_kernel(8, 128), schema=_BLOCK_SCHEMA
+    ).write.parquet(f"{ckpt}/salt=0")
+    rows = spark.read.parquet(f"{ckpt}/salt=0").collect()
+    assert len(rows) > 1 and all(
+        len(r["bucket_ids"]) == r["max_bucket"] - r["min_bucket"] + 1
+        for r in rows
     )
-    got = {r["bucket"] for r in rows if r["hit"]}
-    want = {b for b in range(70) if any(lo <= b <= hi for lo, hi in ranges)}
-    assert got == want
+    files = _part_files(ckpt)
+    for f in files[::2]:
+        _os.remove(f)
+    assert _checkpoint_build(df, ckpt) == direct
+    assert sorted(_committed_bucket_ids(spark, ckpt)) == list(range(256))
+
+
+def test_fully_committed_resume_runs_no_kernel(
+    spark, tmp_path, monkeypatch, resume20k
+):
+    """A resume whose committed rows already hold all n keys reads them
+    back and builds nothing: no MapInPandas frame, no parquet write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    df, direct = resume20k
+    ckpt = str(tmp_path / "ckpt")
+    assert _checkpoint_build(df, ckpt) == direct
+
+    def refuse(*_args, **_kwargs):
+        raise AssertionError("a fully committed resume launched a build")
+
+    monkeypatch.setattr(type(df), "mapInPandas", refuse)
+    monkeypatch.setattr(DataFrameWriter, "parquet", refuse)
+    assert _checkpoint_build(df, ckpt) == direct
 
 
 def test_space_priority_builder_end_to_end(spark):
@@ -341,7 +434,7 @@ def test_space_priority_builder_end_to_end(spark):
 def test_skewed_input_layout_rebalanced(spark):
     """P7 (similar-size repartition) direct exercise: a pathologically
     skewed INPUT layout — every key in one partition — must still build
-    and biject, because the bucket scatter is a repartitionByRange on
+    and biject, because the bucket scatter is a hash repartition on
     bucket id (+ AQE), not the input partitioning."""
     import pyspark.sql.functions as F
 

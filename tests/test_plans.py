@@ -77,27 +77,35 @@ def test_filter_pushdown_reaches_parquet(li):
     assert "GreaterThan(l_quantity" in plan
 
 
-def test_mphf_build_is_single_shuffle(spark, sf_dir):
-    """The distributed build plan: one range-partitioning exchange, then the
-    Arrow kernel — no second Exchange after the shuffle."""
-    from recsplit_spark.mphf import _BLOCK_SCHEMA, _make_kernel
+def test_mphf_build_is_single_shuffle(spark, sf_dir, tmp_path):
+    """The distributed build plan, from the builder's own kernel frame:
+    one hash-partitioning exchange on the bucket id, then the Arrow
+    kernel — no second Exchange after the shuffle. A checkpoint resume
+    adds only a broadcast left-anti join against the committed bucket
+    ids: no second shuffle and no Python membership UDF."""
+    from recsplit_spark.mphf import _BLOCK_SCHEMA, _kernel_blocks, _make_kernel
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     keys = li.select(F.col("l_orderkey").cast("long").alias("__key"))
-    sig = F.xxhash64(F.col("__key"), F.lit(0))
-    sig_df = keys.select(sig.alias("sig")).withColumn(
-        "bucket", F.shiftrightunsigned(F.col("sig"), 64 - 9)
-    )
-    blocks = sig_df.repartitionByRange(8, "bucket").mapInPandas(
-        _make_kernel(8, 128), schema=_BLOCK_SCHEMA
-    )
-    import re
+    kernel = _make_kernel(8, 128)
 
-    plan = _formatted_plan(blocks)
-    # exactly one Exchange NODE (the formatted text repeats each node in the
-    # detail section, so count the numbered node headers)
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    assert "MapInPandas" in plan
+    plain = _formatted_plan(_kernel_blocks(keys, 0, 9, 8, kernel))
+    assert _nodes(plain, "Exchange") == 1, plain
+    assert "hashpartitioning(shiftrightunsigned(sig" in plain, plain
+    assert _nodes(plain, "MapInPandas") == 1, plain
+    assert "BroadcastExchange" not in plain
+
+    path = str(tmp_path / "salt=0")
+    spark.createDataFrame(
+        [(3, 3, 7, 10, 0, [3, 7], [4, 6], [1, 1], b"ab")], _BLOCK_SCHEMA
+    ).write.parquet(path)
+    committed = spark.read.schema(_BLOCK_SCHEMA).parquet(path)
+    resume = _formatted_plan(_kernel_blocks(keys, 0, 9, 8, kernel, committed))
+    assert _nodes(resume, "Exchange") == 1, resume
+    assert _nodes(resume, "BroadcastExchange") == 1, resume
+    assert "LeftAnti" in resume, resume
+    assert _nodes(resume, "MapInPandas") == 1, resume
+    assert "ArrowEvalPython" not in resume, resume
 
 
 def test_sketch_partials_single_scan_no_shuffle(spark, li):
